@@ -10,38 +10,56 @@ corpus?"; answering that must cost O(batch), not O(corpus).
 Design — two ManifestTables under one index root (exactly-once batch
 commits, atomic manifests, idempotent replay for free):
 
-- ``bands``    key (doc_id, band_idx): every doc's LSH band rows. A new
-  batch computes bands for ITS docs only and appends them (MoR) under the
-  batch id; candidate pairs = new bands ⋈ index bands on (band_idx,
-  band_key) + the intra-batch self-join. The index side arrives bucketed by
-  doc_id and pruned to manifested files — never recomputed.
+- ``bands``    key (doc_id, band_idx): every doc's LSH band rows, bucketed
+  by doc id, one generation per batch.
 - ``clusters`` key (doc_id): the current connected-component label per doc
   (cluster_id = min doc_id in the component; singletons carry their own
-  id). New pairs fold in via union-find over (new pairs + the member edges
-  of AFFECTED clusters only) — labels can only change in a cluster that
-  contains a node touched by a new pair, so the fold is O(touched), not
-  O(corpus). Updated labels append as a new LWW generation.
+  id).
 
-Both tables are read with the WINDOW merge strategy: their ``_lsn`` is the
-batch sequence number (shared by every row of a batch), so the CDC read
-path's unique-lsn broadcast join-back does not apply — the per-key
-row_number merge is the correct shape here and shuffles only the index
-table's rows.
+Both tables stamp ``_lsn`` per BATCH, so every merge over them is the
+per-key window (the lake's unique-lsn broadcast join-back is unsound here).
+
+Per batch, ONE delta fold (``fold(leave, enter, batch_id)``) takes leavers
+and entrants together; an id in both is a text change. ``add_batch`` and
+``remove_docs`` are thin calls into it. Entrants come as band rows, either
+a pandas frame (``LiveCuration``'s small deltas) or a Spark frame
+(``add_batch``'s corpus-scale batches, which stay distributed). On the
+driver path:
+
+1. probe: the raw band generations are scanned for rows sharing a band key
+   with an entrant (an IN-list filter, or a semi-join with a Spark
+   entrant frame; the index is never merged or shuffled);
+2. one membership read: the full membership of every cluster holding a
+   probe hit or a leaving/re-entering doc (labels can only change there);
+3. one bucket-pruned read of those members' raw band rows, merged on the
+   driver (latest generation per (doc, band), tombstones dropped) — stale
+   probe hits fall out here;
+4. one edge set (each doc to the min id of every band-key group it shares
+   with the remaining members and the entrants; of a Spark entrant frame
+   only the rows sharing a key reach the driver) and one
+   ``_min_label_components`` pass;
+5. one ``bands`` and one ``clusters`` commit under the batch id: entrant
+   band rows and label rows, changed labels of remaining members, and
+   tombstones for docs that left without re-entering (a re-entering doc
+   gets only its new rows, which out-LSN its old ones).
+
+For pandas entrants the fold hands back the label rows it wrote, so
+``LiveCuration`` joins those instead of reading ``clusters`` back; only a
+fold replayed after a crash, or the distributed twin, is read back by batch
+id. Every read excludes the batch id, so a replay after a crash between the
+two commits recomputes the identical delta. ``driver_pair_limit`` bounds
+each collect of the fold in rows: probe hits, affected-cluster members and
+key-sharing entrant band rows. Past it the same fold runs as pure
+DataFrames (``_fold_distributed``) — nothing corpus-sized reaches the
+driver.
 
 Invariant (tested): after any batch split, ``keep_list()`` is row-identical
 to the one-shot ``dedup_resolution`` over the union of all batches — the
 incremental fold is an exact refactoring of global connected components,
-because band signatures are per-doc deterministic and the pair set
-telescopes (intra(b1) + intra(b2) + cross(b2,b1) = pairs(b1 ∪ b2)).
-
-Scale notes: the pair list and the affected-cluster membership are the
-SMALL artifacts (pairs bounded by LSH bucket caps per doc, membership by
-touched clusters); both are driver-collected under an explicit bound, the
-same adaptive discipline as ``dup_clusters``. ``remove_docs`` handles
-takedown/opt-out: tombstone the doc's band + label rows, then re-fold the
-labels of its cluster over the REMAINING members (removal can split a
-cluster or flip its canonical keeper) — the same O(affected) contract as
-``add_batch``.
+because band signatures are per-doc deterministic and a component can only
+change where a doc joined or left it. Removal can split a cluster or flip
+its keeper; the affected clusters are re-folded from their remaining
+members' persisted bands.
 """
 
 from __future__ import annotations
@@ -55,11 +73,18 @@ from pyspark.sql import DataFrame, SparkSession
 
 from endor_blockchain_data_pipeline_spark.operators.dedup import (
     DUP_CLUSTERS_DRIVER_PAIR_LIMIT,
+    _arrow_col,
+    _min_label_components,
     lsh_bands,
     minhash_signatures,
+    with_band_keys,
 )
 from endor_blockchain_data_pipeline_spark.plans.partitioning import materialize
-from endor_blockchain_data_pipeline_spark.sources.lake import ManifestTable
+from endor_blockchain_data_pipeline_spark.sources.lake import (
+    ManifestTable,
+    bucket_expr,
+    keep_keys,
+)
 
 
 class DedupIndex:
@@ -98,6 +123,10 @@ class DedupIndex:
         # python-side converter matching the declared Spark id type (driver
         # union-find keys, createDataFrame rows)
         self._pyid = int if id_type == "long" else str
+        self._np = "int64" if id_type == "long" else object
+        # the most rows one fold collect may bring to the driver (probe
+        # hits, affected-cluster members, key-sharing entrant band rows);
+        # past it the fold runs distributed
         self.driver_pair_limit = (
             DUP_CLUSTERS_DRIVER_PAIR_LIMIT
             if driver_pair_limit is None
@@ -143,8 +172,8 @@ class DedupIndex:
         # the lsn-equality broadcast join-back is unsound here and the table
         # itself now refuses it.
         # small_commit_rows: writer-side fast path for delta-scoped folds
-        # (the live-curation near index) — 0 (default) keeps standalone
-        # corpus-scale ingestion fully distributed (see ManifestTable).
+        # (the live-curation near index) — 0 (default) keeps the commits of
+        # standalone corpus-scale ingestion distributed (see ManifestTable).
         self.bands = ManifestTable(
             os.path.join(root, "bands"),
             n_buckets=n_buckets,
@@ -216,7 +245,389 @@ class DedupIndex:
             (F.col("cluster_id") == F.col(self.id_col)).alias("keep"),
         )
 
-    # ---------------- the incremental fold ----------------
+    # ---------------- the delta fold ----------------
+
+    def with_band_keys(self, docs: DataFrame, out_col: str = "_bks") -> DataFrame:
+        """``docs`` plus the array of each doc's band keys under this
+        index's signature recipe (row-local, no shuffle)."""
+        p = self.params
+        return with_band_keys(
+            docs, self.text_col, out_col,
+            p["k_shingle"], p["n_hashes"], p["n_bands"], p["hash_fn"],
+        )
+
+    def add_batch(self, docs: DataFrame, batch_id: str) -> dict:
+        """Ingest one document batch (one row per doc): dedup it against
+        the index and itself, append its bands, fold the labels. A doc
+        already in the index is re-ingested with its new text. The batch's
+        band rows stay distributed; only the rows that can carry an edge
+        reach the driver (see ``fold``)."""
+        p = self.params
+        sigs = minhash_signatures(
+            docs, self.text_col, self.id_col,
+            p["k_shingle"], p["n_hashes"], p["hash_fn"],
+        )
+        return self.fold([], lsh_bands(sigs, self.id_col, p["n_bands"]), batch_id)[0]
+
+    def remove_docs(self, ids, batch_id: str) -> dict:
+        """Take docs OUT of the corpus (takedown / opt-out): tombstone their
+        band and label rows and re-fold their clusters over the remaining
+        members — removal can split a cluster or flip its keeper.
+        ``ids`` is a list of doc ids or a one-column DataFrame."""
+        if self.clusters.manifest() is None:
+            return {"batch_id": batch_id, "fold": "noop-empty-index"}
+        return self.fold(ids, None, batch_id)[0]
+
+    def fold(self, leave, enter, batch_id: str):
+        """One batch's delta: ``leave`` docs go out, ``enter`` docs (band
+        rows ``(id, band_idx, band_key)``, a pandas or Spark frame) come in;
+        an id in both is a text change. Publishes ONE bands and ONE
+        clusters commit under ``batch_id`` and returns ``(stats, labels)``:
+        ``labels`` is the pandas frame ``(id, cluster_id)`` of every live
+        label row the fold wrote when ``enter`` was a pandas frame, else
+        None (also on a full replay, or the distributed fold — read those
+        back by batch id). Every read excludes ``batch_id``, so a replay
+        after a crash between the two commits recomputes the identical
+        delta.
+
+        A Spark ``enter`` stays distributed: only its band rows that share
+        a key with another entrant or with a remaining member reach the
+        driver, and its label rows are written by a join. The fold runs on
+        the driver unless a collect — probe hits, affected-cluster members
+        or key-sharing entrant band rows — exceeds ``driver_pair_limit``
+        rows; then the pure-DataFrame twin runs."""
+        import numpy as np
+        import pandas as pd
+        from pyspark.sql import Observation, Window
+
+        if (
+            batch_id in self.bands.committed_batches()
+            and batch_id in self.clusters.committed_batches()
+        ):
+            return {
+                "batch_id": batch_id,
+                "fold": "replay",
+                "replayed_bands": True,
+                "replayed_clusters": True,
+            }, None
+        id_col, limit = self.id_col, self.driver_pair_limit
+        cols = [id_col, "band_idx", "band_key"]
+        if isinstance(leave, DataFrame):
+            leave = _arrow_col(
+                leave.select(F.col(id_col).cast(self.id_type)).toArrow(), id_col
+            )
+        leave = np.unique(np.asarray([self._pyid(i) for i in leave], dtype=self._np))
+        if enter is None:
+            enter = pd.DataFrame({id_col: leave[:0], "band_idx": [], "band_key": []})
+        local = not isinstance(enter, DataFrame)
+        if local:
+            enter = enter[cols].astype({"band_idx": "int32"})
+            n_enter = len(enter)
+            enter_ids = np.unique(enter[id_col].to_numpy(dtype=self._np))
+        else:
+            obs = Observation()
+            enter = materialize(
+                enter.select(id_col, F.col("band_idx").cast("int"), "band_key")
+                .observe(obs, F.count("*").alias("n"))
+            )
+            n_enter = int(obs.get["n"] or 0)
+            # each entrant has exactly one band-0 row: its ids, no shuffle
+            ent_df = enter.where("band_idx = 0").select(id_col)
+
+        def distributed():
+            return self._fold_distributed(leave, enter, batch_id, n_enter)
+
+        # probe: index rows sharing a band key with an entrant, read from
+        # the raw generations (no merge, so the index is never shuffled);
+        # stale hits are re-checked against the merged rows below
+        hits = leave[:0]
+        if n_enter and self.bands.manifest() is not None:
+            raw = self._raw_bands(batch_id)
+            if local:
+                hits = keep_keys(raw, "band_key", enter["band_key"].unique())
+            else:
+                hits = raw.join(enter.select("band_key"), "band_key", "leftsemi")
+            hits = np.unique(_arrow_col(hits.select(id_col).toArrow(), id_col))
+            if len(hits) > limit:
+                return distributed()
+
+        # the affected clusters' full membership: clusters holding a hit, a
+        # leaver or an entrant already indexed (labels can only change
+        # there), each member flagged when it re-enters
+        m_ids, m_cids, m_bk = leave[:0], leave[:0], np.zeros(0, "int32")
+        m_ent = np.zeros(0, bool)
+        cl = self._read(self.clusters, exclude_batch_ids=[batch_id])
+        seeds = np.union1d(hits, leave)
+        if local:
+            seeds = np.union1d(seeds, enter_ids)
+        if cl is not None and (len(seeds) or not local):
+            aff = keep_keys(cl, id_col, seeds).select("cluster_id")
+            members = cl
+            if not local:
+                aff = aff.unionByName(
+                    cl.join(ent_df, id_col, "leftsemi").select("cluster_id")
+                )
+                members = cl.join(
+                    ent_df.withColumn("_ent", F.lit(True)), id_col, "left"
+                )
+            aff = F.broadcast(aff.select(F.col("cluster_id").alias("_cid")))
+            mtbl = (
+                members.join(aff, F.col("cluster_id") == F.col("_cid"), "leftsemi").select(
+                    id_col,
+                    "cluster_id",
+                    bucket_expr(id_col, self.bands.n_buckets).alias("_b"),
+                    *([] if local else [F.col("_ent").isNotNull().alias("_ent")]),
+                )
+                .toArrow()
+            )
+            if mtbl.num_rows > limit:
+                return distributed()
+            m_ids = _arrow_col(mtbl, id_col)
+            m_cids = _arrow_col(mtbl, "cluster_id")
+            m_bk = _arrow_col(mtbl, "_b")
+            m_ent = (
+                np.isin(m_ids, enter_ids) if local else _arrow_col(mtbl, "_ent")
+            ).astype(bool)
+
+        # the members' live band rows: their raw generations (bucket-pruned)
+        # merged here — latest (_lsn, _mts) per (id, band_idx), minus
+        # tombstones
+        live = pd.DataFrame({id_col: leave[:0], "band_idx": [], "band_key": []})
+        if len(m_ids):
+            raw = keep_keys(
+                self._raw_bands(batch_id, buckets=np.unique(m_bk).tolist()),
+                id_col,
+                m_ids,
+            ).select(*cols, "_lsn", "_mts", "_deleted")
+            live = (
+                raw.toArrow()
+                .to_pandas()
+                .sort_values(["_lsn", "_mts"], ascending=False, kind="stable")
+                .drop_duplicates([id_col, "band_idx"])
+            )
+            live = live[~live["_deleted"]][cols]
+        # members that stay (their labels may change) and members that
+        # leave without re-entering (tombstoned)
+        is_left = np.isin(m_ids, leave)
+        is_rem = ~is_left & ~m_ent
+        is_gone = is_left & ~m_ent
+        remaining = m_ids[is_rem]
+        live_rem = live[live[id_col].isin(remaining)]
+
+        # the entrant band rows that can carry an edge: all of a local
+        # frame; of a distributed one, those sharing a key with another
+        # entrant or with a remaining member
+        if local:
+            ent_e = enter
+        else:
+            shared = (
+                enter.withColumn(
+                    "_n", F.count("*").over(Window.partitionBy("band_idx", "band_key"))
+                )
+                .where("_n > 1")
+                .drop("_n")
+            )
+            if len(live_rem):
+                shared = shared.unionByName(
+                    keep_keys(enter, "band_key", live_rem["band_key"].unique())
+                )
+            obs = Observation()
+            shared = materialize(shared.observe(obs, F.count("*").alias("n")))
+            if int(obs.get["n"] or 0) > limit:
+                return distributed()
+            ent_e = shared.toArrow().to_pandas().drop_duplicates()
+            enter_ids = np.unique(ent_e[id_col].to_numpy(dtype=self._np))
+
+        # one edge set: every doc to the min id of each band-key group it
+        # shares (a star per group has the same components as the group's
+        # full clique), over the remaining members and the entrants
+        allb = pd.concat([live_rem, ent_e], ignore_index=True).sort_values(
+            id_col, kind="stable"
+        )
+        gmin = allb.groupby(["band_idx", "band_key"])[id_col].transform("first")
+        e = allb[id_col] != gmin
+        src = allb[id_col][e].to_numpy(dtype=self._np)
+        dst = gmin[e].to_numpy(dtype=self._np)
+        n_pairs = len(pd.DataFrame({"a": src, "b": dst}).drop_duplicates())
+        nodes, labs = _min_label_components(
+            src, dst, extra_nodes=np.concatenate([remaining, enter_ids])
+        )
+
+        def label(ids):
+            return labs[np.searchsorted(nodes, ids)] if len(ids) else ids
+
+        chg = label(remaining) != m_cids[is_rem]
+        labels = pd.DataFrame(
+            {
+                id_col: np.concatenate([enter_ids, remaining[chg]]),
+                "cluster_id": np.concatenate([label(enter_ids), label(remaining)[chg]]),
+            }
+        )
+        gone = pd.DataFrame({id_col: m_ids[is_gone], "cluster_id": m_cids[is_gone]})
+        if local:
+            band_rows = self._local(enter, "bands")
+            label_rows = self._local(labels, "clusters")
+        else:
+            band_rows = enter
+            # every entrant outside an edge labels itself
+            label_rows = ent_df.select(id_col, F.col(id_col).alias("cluster_id"))
+            if len(labels):
+                label_rows = label_rows.join(
+                    F.broadcast(self._local_ids(enter_ids)), id_col, "left_anti"
+                ).unionByName(self._local(labels, "clusters"))
+
+        def frame(rows, tombs, table):
+            def make(seq):
+                out = self._with_internals(rows, batch_id, seq)
+                if len(tombs):
+                    tombs_df = self._local(tombs, table)
+                    out = out.unionByName(
+                        self._with_internals(tombs_df, batch_id, seq, True)
+                    )
+                return out
+
+            return make
+
+        n_new = len(enter_ids) if local else n_enter // int(self.params["n_bands"])
+        stats = self._commit_frames(
+            batch_id,
+            frame(band_rows, live[live[id_col].isin(gone[id_col])], "bands"),
+            frame(label_rows, gone, "clusters"),
+            {
+                "batch_id": batch_id,
+                "fold": "driver-union-find",
+                "n_new_docs": n_new,
+                "n_removed": len(gone),
+                "n_pairs": n_pairs,
+                "n_label_writes": n_new + int(chg.sum()),
+            },
+        )
+        return stats, labels if local else None
+
+    def _raw_bands(self, batch_id: str, buckets=None) -> DataFrame:
+        """Every generation of the band rows (no merge), internals kept."""
+        return self.bands.read(
+            self.spark,
+            buckets=buckets,
+            with_internal=True,
+            merge_strategy="none",
+            exclude_batch_ids=[batch_id],
+        )
+
+    def _local(self, pdf, table: str) -> DataFrame:
+        schema = (
+            f"{self.id_col} {self.id_type}, band_idx int, band_key string"
+            if table == "bands"
+            else f"{self.id_col} {self.id_type}, cluster_id {self.id_type}"
+        )
+        return self.spark.createDataFrame(pdf, schema)
+
+    def _fold_distributed(self, leave, enter, batch_id: str, n_enter: int):
+        """The same delta fold as pure DataFrames, for deltas beyond the
+        driver bound: merged index reads, the star edge set, ``dup_clusters``
+        label propagation, and label rows chosen by joins — nothing
+        corpus-sized is collected."""
+        from pyspark.sql import Observation
+
+        from endor_blockchain_data_pipeline_spark.operators.dedup import dup_clusters
+
+        id_col = self.id_col
+        if not isinstance(enter, DataFrame):
+            enter = self._local(enter[[id_col, "band_idx", "band_key"]], "bands")
+        enter_ids = enter.select(id_col).distinct()
+        sup = self._local_ids(leave).unionByName(enter_ids).distinct()
+        live_b = self._read(self.bands, exclude_batch_ids=[batch_id])
+        if live_b is None:
+            live_b = self._local([], "bands")
+        live_b = live_b.select(id_col, "band_idx", "band_key")
+        cl = self._read(self.clusters, exclude_batch_ids=[batch_id])
+        if cl is None:
+            cl = self._local([], "clusters")
+        hits = (
+            live_b.join(
+                enter.select("band_idx", "band_key").distinct(),
+                ["band_idx", "band_key"],
+                "leftsemi",
+            )
+            .select(id_col)
+            .join(sup, id_col, "left_anti")
+        )
+        aff = (
+            cl.join(hits.unionByName(sup), id_col, "leftsemi")
+            .select(F.col("cluster_id").alias("_cid"))
+            .distinct()
+        )
+        obs = Observation()
+        members = materialize(
+            cl.join(aff, cl["cluster_id"] == F.col("_cid"), "leftsemi")
+            .select(id_col, "cluster_id")
+            .join(sup.withColumn("_sup", F.lit(True)), id_col, "left")
+            .join(enter_ids.withColumn("_ent", F.lit(True)), id_col, "left")
+            .select(
+                id_col,
+                "cluster_id",
+                F.coalesce("_sup", F.lit(False)).alias("_sup"),
+                (F.col("_sup").isNotNull() & F.col("_ent").isNull()).alias("_gone"),
+            )
+            .observe(obs, F.sum(F.col("_gone").cast("long")).alias("n_gone"))
+        )
+        n_gone = int(obs.get["n_gone"] or 0)
+        remaining = members.where("NOT _sup").select(id_col, "cluster_id")
+        gone = members.where("_gone").select(id_col, "cluster_id")
+        probe = live_b.join(remaining.select(id_col), id_col, "leftsemi").unionByName(
+            enter.select(id_col, "band_idx", "band_key")
+        )
+        gmin = probe.groupBy("band_idx", "band_key").agg(F.min(id_col).alias("_m"))
+        edges = (
+            probe.join(gmin, ["band_idx", "band_key"])
+            .where(F.col(id_col) != F.col("_m"))
+            .select(
+                F.least(id_col, "_m").alias("id_a"),
+                F.greatest(id_col, "_m").alias("id_b"),
+            )
+            .distinct()
+        )
+        labels = dup_clusters(
+            edges, driver_pair_limit=self.driver_pair_limit, assume_distinct=True
+        ).select(F.col("node").alias("_node"), F.col("cluster_id").alias("_lab"))
+
+        def relabel(df):
+            return df.join(labels, F.col(id_col) == F.col("_node"), "left").select(
+                *df.columns, F.coalesce("_lab", F.col(id_col)).alias("_new")
+            )
+
+        writes = relabel(enter_ids).select(id_col, F.col("_new").alias("cluster_id"))
+        changed = (
+            relabel(remaining)
+            .where(F.col("_new") != F.col("cluster_id"))
+            .select(id_col, F.col("_new").alias("cluster_id"))
+        )
+        tomb_b = live_b.join(gone.select(id_col), id_col, "leftsemi")
+        stats = self._commit_frames(
+            batch_id,
+            lambda seq: self._with_internals(enter, batch_id, seq).unionByName(
+                self._with_internals(tomb_b, batch_id, seq, True)
+            ),
+            lambda seq: self._with_internals(
+                writes.unionByName(changed), batch_id, seq
+            ).unionByName(self._with_internals(gone, batch_id, seq, True)),
+            {
+                "batch_id": batch_id,
+                "fold": "distributed-label-propagation",
+                "n_new_docs": n_enter // int(self.params["n_bands"]),
+                "n_removed": n_gone,
+                "n_pairs": None,
+                "n_label_writes": None,
+            },
+        )
+        return stats, None
+
+    def _local_ids(self, ids) -> DataFrame:
+        import pandas as pd
+
+        return self.spark.createDataFrame(
+            pd.DataFrame({self.id_col: ids}), f"{self.id_col} {self.id_type}"
+        )
 
     def _with_internals(
         self, df: DataFrame, batch_id: str, seq: int, deleted: bool = False
@@ -229,282 +640,13 @@ class DedupIndex:
             F.lit(batch_id).alias("_batch"),
         )
 
-    def add_batch(self, docs: DataFrame, batch_id: str) -> dict:
-        """Ingest one document batch: dedup it against the index + itself,
-        append its bands, fold the new pairs into the cluster labels.
-
-        Idempotent per table (batch registry skip), so a crash between the
-        two commits resumes cleanly: the pair computation always reads the
-        index EXCLUDING this batch id, making replay deterministic whether
-        or not the bands commit already landed.
-        """
-        if (
-            batch_id in self.bands.committed_batches()
-            and batch_id in self.clusters.committed_batches()
-        ):
-            # Fully-committed replay: skip the signature/pair/fold compute
-            # entirely — O(1), matching what the skip message promises. A
-            # PARTIAL replay (bands landed, clusters didn't) still recomputes
-            # below, deterministically, to finish the crashed fold.
-            return {
-                "batch_id": batch_id,
-                "fold": "replay",
-                "replayed_bands": True,
-                "replayed_clusters": True,
-            }
-        id_col = self.id_col
-        p = self.params
-        new_bands = materialize(
-            lsh_bands(
-                minhash_signatures(
-                    docs, self.text_col, id_col,
-                    p["k_shingle"], p["n_hashes"], p["hash_fn"],
-                ),
-                id_col,
-                p["n_bands"],
-            )
-        )
-
-        # candidate pairs: cross (new x index) + intra (new x new), both
-        # bucket joins on (band_idx, band_key) — never all-pairs.
-        intra_a, intra_b = new_bands.alias("a"), new_bands.alias("b")
-        pairs = (
-            intra_a.join(
-                intra_b,
-                (F.col("a.band_idx") == F.col("b.band_idx"))
-                & (F.col("a.band_key") == F.col("b.band_key"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .select(
-                F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-            )
-        )
-        n_cross = 0
-        index = self._read(self.bands, exclude_batch_ids=[batch_id])
-        if index is not None:
-            idx = index.alias("i")
-            cross = (
-                new_bands.alias("n")
-                .join(
-                    idx,
-                    (F.col("n.band_idx") == F.col("i.band_idx"))
-                    & (F.col("n.band_key") == F.col("i.band_key"))
-                    & (F.col(f"n.{id_col}") != F.col(f"i.{id_col}")),
-                )
-                .select(
-                    F.least(F.col(f"n.{id_col}"), F.col(f"i.{id_col}")).alias("id_a"),
-                    F.greatest(F.col(f"n.{id_col}"), F.col(f"i.{id_col}")).alias("id_b"),
-                )
-            )
-            pairs = pairs.unionByName(cross)
-        # Count rides the materialization (Observation); a limit(n).collect()
-        # would run CollectLimit's scale-up job ladder (1, 4, 16, ...
-        # partitions — several driver-scheduled jobs) just to probe the size.
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        pairs = materialize(
-            pairs.distinct().observe(obs, F.count("*").alias("n"))
-        )
-        n_pairs = int(obs.get["n"] or 0)
-        if n_pairs > self.driver_pair_limit:
-            # Pair set too big for the driver fold: go DISTRIBUTED — same
-            # adaptive discipline as dup_clusters, nothing corpus-sized
-            # ever reaches the driver.
-            return self._add_batch_distributed(docs, batch_id, new_bands, pairs)
-        import numpy as np
-        import pandas as pd
-
-        from endor_blockchain_data_pipeline_spark.operators.dedup import (
-            _arrow_col,
-            _min_label_components,
-        )
-
-        # Arrow collect (bounded by the limit just checked) — a .collect()
-        # pays a per-Row py4j/pickle round-trip
-        ptbl = pairs.toArrow()
-        p_a, p_b = _arrow_col(ptbl, "id_a"), _arrow_col(ptbl, "id_b")
-
-        # ---- fold pairs into cluster labels (driver connected components
-        # over the TOUCHED subgraph only — vectorized min-label
-        # propagation, output identical to union-find) ----
-        touched = np.unique(np.concatenate([p_a, p_b]))
-        m_ids = m_cids = touched[:0]
-        cl = self._read(self.clusters)
-        if cl is not None and len(touched):
-            # affected clusters = clusters containing a touched node; pull
-            # their FULL membership (labels can only change there). Two
-            # pushed-filter reads of the small clusters table, one collect
-            # bounded by affected-cluster membership.
-            touched_df = self.spark.createDataFrame(
-                pd.DataFrame({id_col: touched}), f"{id_col} {self.id_type}"
-            )
-            affected_cids = cl.join(
-                F.broadcast(touched_df), id_col, "leftsemi"
-            ).select("cluster_id").distinct()
-            mtbl = (
-                cl.join(
-                    F.broadcast(affected_cids.withColumnRenamed("cluster_id", "_cid")),
-                    cl["cluster_id"] == F.col("_cid"),
-                    "leftsemi",
-                )
-                .select(id_col, "cluster_id")
-                .toArrow()
-            )
-            m_ids = _arrow_col(mtbl, id_col)
-            m_cids = _arrow_col(mtbl, "cluster_id")
-        # edges = new pairs + (member -> its current label); nodes covers
-        # every endpoint, exactly the union-find's parent key set
-        nodes, labs = _min_label_components(
-            np.concatenate([m_ids, p_a]), np.concatenate([m_cids, p_b])
-        )
-
-        # rows to (re)write: every doc of THIS batch + any previously-known
-        # member whose label changed. Only the TOUCHED subgraph's labels
-        # (pair-bounded) travel through the driver; untouched new docs label
-        # themselves BY EXPRESSION off the materialized bands — the r5 path
-        # collected every batch doc id (O(batch) driver traffic) just to
-        # emit identity labels.
-        label_schema = f"{id_col} {self.id_type}, cluster_id {self.id_type}"
-        # one row per doc WITHOUT a distinct shuffle: signatures are a
-        # groupBy(id) (ids unique), so every doc has exactly one band_idx=0
-        # row in the materialized bands
-        new_ids_df = new_bands.where(F.col("band_idx") == 0).select(id_col)
-        if len(nodes):
-            tl = F.broadcast(
-                self.spark.createDataFrame(
-                    pd.DataFrame({id_col: nodes, "cluster_id": labs}),
-                    label_schema,
-                )
-            )
-            labels = new_ids_df.join(
-                tl.withColumnRenamed("cluster_id", "_cid"), id_col, "left"
-            ).select(
-                F.col(id_col),
-                F.coalesce("_cid", F.col(id_col)).alias("cluster_id"),
-            )
-        else:
-            labels = new_ids_df.select(
-                F.col(id_col), F.col(id_col).alias("cluster_id")
-            )
-        if len(m_ids):
-            new_lab = labs[np.searchsorted(nodes, m_ids)]
-            chg = new_lab != m_cids
-            if chg.any():
-                labels = labels.unionByName(
-                    self.spark.createDataFrame(
-                        pd.DataFrame(
-                            {id_col: m_ids[chg], "cluster_id": new_lab[chg]}
-                        ),
-                        label_schema,
-                    ).join(new_ids_df, id_col, "left_anti")
-                )
-        return self._commit_batch(
-            batch_id,
-            new_bands,
-            labels,
-            {
-                "batch_id": batch_id,
-                "fold": "driver-union-find",
-                # filled from the staged files' parquet footers at commit
-                "n_new_docs": None,
-                "n_pairs": n_pairs,
-                "n_label_writes": None,
-            },
-        )
-
-    def _add_batch_distributed(
-        self, docs: DataFrame, batch_id: str, new_bands: DataFrame, pairs: DataFrame
-    ) -> dict:
-        """The fold for pair sets beyond the driver bound: pure DataFrames.
-
-        Edges = new pairs + (member -> cluster_id) edges of the AFFECTED
-        clusters; ``dup_clusters`` runs its distributed hash-min label
-        propagation over them (it would re-choose union-find only if the
-        union shrank under the bound). Label rows to write are computed by
-        joins — nothing corpus-sized is ever collected.
-        """
-        id_col = self.id_col
-        touched = (
-            pairs.select(F.col("id_a").alias(id_col))
-            .unionByName(pairs.select(F.col("id_b").alias(id_col)))
-            .distinct()
-        )
-        cl = self._read(self.clusters)
-        edges = pairs
-        members = None
-        if cl is not None:
-            affected_cids = (
-                cl.join(touched, id_col, "leftsemi").select("cluster_id").distinct()
-            )
-            members = materialize(
-                cl.join(
-                    affected_cids.withColumnRenamed("cluster_id", "_cid"),
-                    cl["cluster_id"] == F.col("_cid"),
-                    "leftsemi",
-                ).select(id_col, "cluster_id")
-            )
-            member_edges = members.where(
-                F.col(id_col) != F.col("cluster_id")
-            ).select(
-                F.least(id_col, "cluster_id").alias("id_a"),
-                F.greatest(id_col, "cluster_id").alias("id_b"),
-            )
-            edges = edges.unionByName(member_edges)
-        from endor_blockchain_data_pipeline_spark.operators.dedup import dup_clusters
-
-        labels = dup_clusters(edges, driver_pair_limit=self.driver_pair_limit)
-        new_rows = (
-            docs.select(F.col(id_col))
-            .distinct()
-            .join(labels, F.col(id_col) == labels["node"], "left")
-            .select(
-                F.col(id_col),
-                F.coalesce("cluster_id", F.col(id_col)).alias("cluster_id"),
-            )
-        )
-        out = new_rows
-        if members is not None:
-            changed = (
-                members.withColumnRenamed("cluster_id", "_old")
-                .join(labels, F.col(id_col) == labels["node"], "left")
-                .select(
-                    F.col(id_col),
-                    F.coalesce("cluster_id", F.col(id_col)).alias("cluster_id"),
-                    F.col("_old"),
-                )
-                .where(F.col("cluster_id") != F.col("_old"))
-                .join(new_rows.select(id_col), id_col, "left_anti")
-                .select(id_col, "cluster_id")
-            )
-            out = out.unionByName(changed)
-        return self._commit_batch(
-            batch_id,
-            new_bands,
-            out,
-            {"batch_id": batch_id, "fold": "distributed-label-propagation"},
-        )
-
-    def _commit_batch(
-        self, batch_id: str, new_bands: DataFrame, labels: DataFrame, stats: dict
-    ) -> dict:
-        return self._commit_frames(
-            batch_id,
-            lambda seq: self._with_internals(new_bands, batch_id, seq),
-            lambda seq: self._with_internals(labels, batch_id, seq),
-            stats,
-        )
-
     def _commit_frames(self, batch_id: str, make_bands, make_clusters, stats) -> dict:
         """Publish bands then cluster labels, each idempotent per batch id.
 
-        The two STAGE passes (the heavy, fully-parallel file writes) run
-        concurrently — the tables are independent until their manifest
-        commits, the same pipelining discipline as the CDC job's MoR
-        staging; commits stay ordered (bands first) so a crash window
-        always leaves the pair-replay deterministic. ``make_bands`` /
-        ``make_clusters`` build the fully-internaled generation frames for
-        the chosen sequence number (append rows, tombstones, or a mix).
+        The two stage passes run concurrently (the tables are independent
+        until their manifest commits); the commits stay ordered, bands
+        first. ``make_bands`` / ``make_clusters`` build the internaled
+        generation frames (rows and tombstones) for the sequence number.
         """
         import concurrent.futures as _cf
 
@@ -517,10 +659,6 @@ class DedupIndex:
         stats = {**stats, "replayed_bands": False, "replayed_clusters": False}
         do_bands = batch_id not in self.bands.committed_batches()
         do_clusters = batch_id not in self.clusters.committed_batches()
-
-        def _staged_rows(staged: dict) -> int:
-            return sum(s["n_rows"] for s in staged["bucket_stats"].values())
-
         with _cf.ThreadPoolExecutor(max_workers=2) as pool:
             fb = (
                 pool.submit(self.bands.stage, make_bands(seq), batch_id)
@@ -533,27 +671,15 @@ class DedupIndex:
                 else None
             )
             if fb is not None:
-                staged_b = fb.result()
-                # doc/label counts come free from the staged parquet footers
-                # (no extra count jobs — the r5 driver path collected every
-                # batch id partly to report these)
-                if stats.get("n_new_docs", 0) is None:
-                    stats["n_new_docs"] = _staged_rows(staged_b) // int(
-                        self.params["n_bands"]
-                    )
                 self.bands.commit_staged(
-                    staged_b, batch_id, seq, seq, None, mode="append"
+                    fb.result(), batch_id, seq, seq, None, mode="append"
                 )
             else:
                 stats["replayed_bands"] = True
             if fc is not None:
                 staged_c = fc.result()
-                if stats.get("n_label_writes", 0) is None:
-                    stats["n_label_writes"] = _staged_rows(staged_c)
-                # the bucket ids this fold's label rows landed in — free
-                # driver-side metadata callers reuse to bucket-prune their
-                # read-back of exactly these rows (LiveCuration.refresh)
-                # without paying a collect_set observation action for it
+                # the buckets this fold's label rows landed in: callers
+                # bucket-prune their lookups of exactly these rows with it
                 stats["label_buckets"] = sorted(
                     int(b) for b in staged_c["new_buckets"]
                 )
@@ -563,208 +689,3 @@ class DedupIndex:
             else:
                 stats["replayed_clusters"] = True
         return stats
-
-    # ---------------- removal (takedown / opt-out) ----------------
-
-    def remove_docs(self, ids, batch_id: str) -> dict:
-        """Take docs OUT of the corpus: tombstone their band rows and label
-        rows, then re-fold the labels of every AFFECTED cluster over its
-        REMAINING members. Removal can split a cluster (the removed doc may
-        have been the only LSH bridge between two subgroups) and can flip
-        the canonical keeper (the removed doc may have been the min id), so
-        the fold recomputes connected components from the persisted band
-        index — scoped to affected-cluster membership, O(affected), never
-        O(corpus). Afterwards ``keep_list()`` equals the one-shot
-        resolution over the remaining corpus (tested). This is the CDC
-        core's delete handling (tombstones win the per-key merge) applied
-        to the curation index; re-adding a removed doc later simply
-        out-LSNs its tombstones.
-
-        ``ids`` is a list of doc ids or a one-column DataFrame.
-        """
-        if (
-            batch_id in self.bands.committed_batches()
-            and batch_id in self.clusters.committed_batches()
-        ):
-            return {
-                "batch_id": batch_id,
-                "fold": "replay",
-                "replayed_bands": True,
-                "replayed_clusters": True,
-            }
-        id_col = self.id_col
-        if isinstance(ids, DataFrame):
-            ids_df = ids.select(F.col(id_col).cast(self.id_type)).distinct()
-        else:
-            ids_df = self.spark.createDataFrame(
-                [(self._pyid(i),) for i in sorted(set(ids))],
-                f"{id_col} {self.id_type}",
-            )
-        # Reads EXCLUDE this batch id: replay after a crash between the two
-        # commits sees the same pre-removal state either way (the remaining
-        # members' rows are never tombstoned by this batch).
-        cl = self._read(self.clusters, exclude_batch_ids=[batch_id])
-        if cl is None:
-            return {"batch_id": batch_id, "fold": "noop-empty-index"}
-        bands = self._read(self.bands, exclude_batch_ids=[batch_id])
-        ids_b = F.broadcast(ids_df)
-
-        from pyspark.sql import Observation
-
-        affected_cids = (
-            cl.join(ids_b, id_col, "leftsemi").select("cluster_id").distinct()
-        )
-        # One materialization carries the removed/remaining SPLIT as a flag
-        # and both side counts as observed sums (r5 paid three separate
-        # materializations plus limit(n).collect() probe ladders here).
-        obs_m = Observation()
-        members = materialize(
-            cl.join(
-                F.broadcast(affected_cids.withColumnRenamed("cluster_id", "_cid")),
-                cl["cluster_id"] == F.col("_cid"),
-                "leftsemi",
-            )
-            .select(id_col, "cluster_id")
-            .join(F.broadcast(ids_df.withColumn("_rm0", F.lit(True))), id_col, "left")
-            .select(
-                id_col,
-                "cluster_id",
-                F.coalesce("_rm0", F.lit(False)).alias("_rm"),
-            )
-            .observe(
-                obs_m,
-                F.sum(F.col("_rm").cast("long")).alias("n_removed"),
-                F.sum((~F.col("_rm")).cast("long")).alias("n_remaining"),
-            )
-        )
-        m_stats = obs_m.get
-        n_removed = int(m_stats["n_removed"] or 0)
-        removed = members.where("_rm").select(id_col, "cluster_id")
-        remaining = members.where("NOT _rm").select(id_col, "cluster_id")
-        # Candidate edges among the REMAINING affected members, recomputed
-        # from the persisted band index (a removed bridge doc contributes no
-        # edges): bands semi-join membership, then the banded self-join —
-        # the same bucketed shape as add_batch, scoped to touched clusters.
-        rb = materialize(
-            bands.join(remaining.select(id_col), id_col, "leftsemi")
-        )
-        a, b = rb.alias("a"), rb.alias("b")
-        obs_e = Observation()
-        edges = materialize(
-            a.join(
-                b,
-                (F.col("a.band_idx") == F.col("b.band_idx"))
-                & (F.col("a.band_key") == F.col("b.band_key"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .select(
-                F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-            )
-            .distinct()
-            .observe(obs_e, F.count("*").alias("n"))
-        )
-        n_edges = int(obs_e.get["n"] or 0)
-        tomb_bands = bands.join(ids_b, id_col, "leftsemi")
-
-        limit = self.driver_pair_limit
-        if int(m_stats["n_remaining"] or 0) > limit or n_edges > limit:
-            return self._remove_docs_distributed(
-                batch_id, remaining, edges, tomb_bands, removed, n_removed
-            )
-        import numpy as np
-        import pandas as pd
-
-        from endor_blockchain_data_pipeline_spark.operators.dedup import (
-            _arrow_col,
-            _min_label_components,
-        )
-
-        # Arrow collects (bounded by the limit just checked); then the
-        # driver connected components over the remaining affected subgraph
-        # only — vectorized min-label propagation, identical to union-find
-        # (extra_nodes: edge-less remaining members label themselves)
-        rtbl = remaining.toArrow()
-        etbl = edges.toArrow()
-        r_ids = _arrow_col(rtbl, id_col)
-        r_cids = _arrow_col(rtbl, "cluster_id")
-        nodes, labs = _min_label_components(
-            _arrow_col(etbl, "id_a"), _arrow_col(etbl, "id_b"),
-            extra_nodes=r_ids,
-        )
-        label_schema = f"{id_col} {self.id_type}, cluster_id {self.id_type}"
-        n_label_writes = 0
-        if len(r_ids):
-            new_lab = labs[np.searchsorted(nodes, r_ids)]
-            chg = new_lab != r_cids
-            n_label_writes = int(chg.sum())
-        if n_label_writes:
-            live = self.spark.createDataFrame(
-                pd.DataFrame({id_col: r_ids[chg], "cluster_id": new_lab[chg]}),
-                label_schema,
-            )
-        else:
-            live = self.spark.createDataFrame([], label_schema)
-        return self._commit_frames(
-            batch_id,
-            lambda seq: self._with_internals(tomb_bands, batch_id, seq, deleted=True),
-            lambda seq: self._with_internals(live, batch_id, seq).unionByName(
-                self._with_internals(
-                    removed.select(id_col, "cluster_id"), batch_id, seq, deleted=True
-                )
-            ),
-            {
-                "batch_id": batch_id,
-                "fold": "driver-union-find",
-                "n_removed": n_removed,  # observed on the members action
-                "n_label_writes": n_label_writes,
-            },
-        )
-
-    def _remove_docs_distributed(
-        self,
-        batch_id: str,
-        remaining: DataFrame,
-        edges: DataFrame,
-        tomb_bands: DataFrame,
-        removed: DataFrame,
-        n_removed: int,
-    ) -> dict:
-        """Removal fold beyond the driver bound: label the remaining
-        affected subgraph with the distributed hash-min propagation and
-        write only the changed labels — nothing corpus-sized collects."""
-        from endor_blockchain_data_pipeline_spark.operators.dedup import dup_clusters
-
-        id_col = self.id_col
-        # edges arrive distinct + (a<b)-oriented (materialized upstream)
-        labels = dup_clusters(
-            edges, driver_pair_limit=self.driver_pair_limit,
-            assume_distinct=True,
-        )
-        live = (
-            remaining.withColumnRenamed("cluster_id", "_old")
-            .join(labels, F.col(id_col) == labels["node"], "left")
-            .select(
-                F.col(id_col),
-                F.coalesce("cluster_id", F.col(id_col)).alias("cluster_id"),
-                "_old",
-            )
-            .where(F.col("cluster_id") != F.col("_old"))
-            .select(id_col, "cluster_id")
-        )
-        return self._commit_frames(
-            batch_id,
-            lambda seq: self._with_internals(tomb_bands, batch_id, seq, deleted=True),
-            lambda seq: self._with_internals(live, batch_id, seq).unionByName(
-                self._with_internals(
-                    removed.select(id_col, "cluster_id"), batch_id, seq, deleted=True
-                )
-            ),
-            {
-                "batch_id": batch_id,
-                "fold": "distributed-label-propagation",
-                # same stats contract as the driver path: callers must not
-                # see a different shape when the size bound flips the fold
-                "n_removed": n_removed,  # observed on the members action
-                "n_label_writes": None,  # not collected — distributed
-            },
-        )

@@ -26,9 +26,9 @@ lake's atomic manifest commits:
   verdicts table (bucketed by conv), so each lookup direction has a
   pruned path.
 - ``near``    a :class:`DedupIndex` (string ids): the persisted
-  MinHash-LSH band + cluster-label index, maintained by ``add_batch`` /
-  ``remove_docs`` with their O(affected-cluster) folds. Its population is
-  exactly the funnel's stage-3 input: quality-passing exact-keepers.
+  MinHash-LSH band + cluster-label index, maintained by one delta fold per
+  batch. Its population is exactly the funnel's stage-3 input:
+  quality-passing exact-keepers.
 - ``verdicts`` ManifestTable keyed ``conv_id``: one row per conversation
   with the RAW stage flags (quality_pass, exact_keep, near_keep,
   decont_pass) plus the change detectors (fingerprint, text_hash).
@@ -36,29 +36,33 @@ lake's atomic manifest commits:
   stage k shows False for every later stage) that is row-identical to
   ``curate_corpus``'s one-shot verdict table (tested).
 
-Per-batch flow (``refresh(changed_ids, batch_id)``):
+Per-batch flow (``refresh(changed_ids, batch_id)``). Everything a refresh
+touches is O(changed + blast radius), so each lookup is one Arrow collect
+and the funnel logic runs on the driver in pandas:
 
-1. read the changed conversations' OLD verdict rows (bucket-pruned) and
-   their NEW transcripts (bucket-pruned lake read -> ``array_sort``
-   reassembly); per-doc flags (quality, fingerprint, decontamination) are
-   map-only column exprs over the new docs.
-2. diff old vs new membership of the exact index; commit tombstones +
-   appends; recompute keepers for the affected fingerprints only.
-3. diff the near population (quality & exact_keep): leavers + text
-   changes -> ``remove_docs``; entrants + text changes -> ``add_batch``.
-   Entrants that were NOT in the CDC batch (a keeper flip pulled them in)
-   get their transcripts reassembled on demand — bounded by affected
-   fingerprint groups, not the corpus.
-4. collect the near index's label delta (the rows its two commits wrote —
-   read back by batch id, not recomputed) and upsert every verdict row
-   whose flags changed; deleted conversations tombstone their row.
+1. the changed ids with their bucket ids in the conv-keyed stores;
+2. side by side: their NEW transcripts (bucket-pruned lake read,
+   ``array_sort`` reassembly, per-doc flags and LSH band keys as row-local
+   column exprs) and their OLD verdict rows;
+3. the exact-index membership delta is committed, then the keepers of the
+   affected fingerprints come from the pre-batch rows + the delta;
+4. the old verdict rows of affected members outside the batch;
+5. the near-population diff: leavers and entrants (a text change is both)
+   go into ONE ``DedupIndex.fold``; entrants pulled in by a keeper flip get
+   their band keys from an on-demand transcript read;
+6. the verdict upsert: every conv whose row changed, with near flags from
+   the label rows the fold hands back (read back by batch id only for a
+   fold replayed after a crash or the distributed fold); deleted convs
+   tombstone their row, and a conv with neither a transcript nor an old
+   verdict writes nothing.
 
-Every read taken BEFORE a commit excludes this batch's id, and every
-sub-commit (exact, near-remove, near-add, verdicts) is idempotent per
-batch id, so a crash anywhere in the flow resumes by re-running the same
-``refresh`` — landed commits are skipped, pending ones are recomputed
-from the identical pre-batch snapshot (the CDC job's crash-window
-contract, applied to curation state).
+Sub-commits, in order: ``exact``, ``near.bands``, ``near.clusters``,
+``verdicts`` (the completion marker). Every read taken BEFORE a commit
+excludes this batch's id and every sub-commit is idempotent per batch id,
+so a crash at any publish point resumes by re-running the same
+``refresh``: landed commits are skipped, pending ones are recomputed from
+the identical pre-batch snapshot (the CDC job's crash-window contract,
+applied to curation state).
 
 Caveats vs the one-shot funnel, both deliberate:
 - stage-5 mix sampling is NOT materialized here: it is a deterministic
@@ -79,6 +83,7 @@ import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from endor_blockchain_data_pipeline_spark.functions.text import (
     fingerprint_expr,
@@ -88,13 +93,21 @@ from endor_blockchain_data_pipeline_spark.operators.curate import (
 )
 from endor_blockchain_data_pipeline_spark.operators.dedup import decontaminate
 from endor_blockchain_data_pipeline_spark.operators.incremental_dedup import DedupIndex
-from endor_blockchain_data_pipeline_spark.plans.partitioning import materialize
 from endor_blockchain_data_pipeline_spark.sources.lake import (
     ManifestTable,
     bucket_expr,
+    keep_keys,
 )
 
 RAW_FLAGS = ("quality_pass", "exact_keep", "near_keep", "decont_pass")
+
+
+def _nullable(pdf):
+    """Verdict columns as pandas nullable dtypes, so a reindex that adds
+    missing convs keeps 64-bit text hashes exact (no float round-trip)."""
+    return pdf.astype(
+        {f: "boolean" for f in RAW_FLAGS if f in pdf.columns} | {"text_hash": "Int64"}
+    )
 
 
 class LiveCuration:
@@ -120,7 +133,7 @@ class LiveCuration:
         dup_word_max: float | None = None,
         symbol_ratio_max: float | None = None,
         n_buckets: int = 16,
-        small_commit_rows: int | None = None,
+        small_commit_rows: int = 1,
         **index_params,
     ) -> None:
         self.spark = spark
@@ -161,17 +174,11 @@ class LiveCuration:
             with open(pfile, "w") as fh:
                 json.dump(self.params, fh)
         # Refresh commits are O(changed conversations + blast radius) by
-        # contract, so the stores default to the lake's driver-side
-        # small-commit staging (one Arrow collect + local bucket writes per
-        # commit instead of a shuffle+write Spark job — the refresh's fixed
-        # cost is ~7 such commits per batch). The threshold is advisory
-        # sizing, env-tunable for production batch profiles; a collect that
-        # overruns the driver's result cap falls back to the distributed
-        # write, so an unexpectedly large delta degrades in speed only.
-        if small_commit_rows is None:
-            small_commit_rows = int(
-                os.environ.get("ENDOR_SMALL_COMMIT_ROWS", "250000")
-            )
+        # contract, so the stores stage on the driver (one Arrow collect +
+        # local bucket writes per commit instead of a shuffle+write Spark
+        # job): any small_commit_rows > 0 selects that path, 0 keeps the
+        # distributed write. A collect over the driver's result cap still
+        # falls back to the distributed write.
         # per-BATCH _lsn on all three stores -> window merge only
         self.exact = ManifestTable(
             os.path.join(root, "exact"),
@@ -206,62 +213,27 @@ class LiveCuration:
             return None
         return table.read(self.spark, **kw)
 
-    def _pruned(
-        self,
-        table: ManifestTable,
-        keys: DataFrame,
-        key_col: str,
-        buckets: list | None = None,
-        **kw,
+    def _lookup(
+        self, table: ManifestTable, keys, buckets, batch_id: str
     ) -> DataFrame | None:
-        """Bucket-pruned point-lookup read: hash the (small) key frame to
-        its bucket ids (collect is bounded by n_buckets), hand the manifest
-        only those buckets' files, then semi-join the keys back.
-
-        ``buckets``: the key frame's bucket-id set when the caller already
-        has it — ``refresh`` observes ``collect_set(bucket_expr(..))`` on
-        the frames' own materialization actions, so no pruned read pays a
-        standalone collect job (bounded by n_buckets either way)."""
-        if table.manifest() is None:
+        """The current rows of ``table`` for driver-held ``keys`` of its
+        bucket key: only ``buckets``' files are scanned (None: all), the key
+        list filters below the generation merge, and this batch's own
+        sub-commit is excluded so a replay reads the pre-batch state."""
+        if table.manifest() is None or not len(keys):
             return None
-        if buckets is None:
-            buckets = [
-                r["b"]
-                for r in keys.select(
-                    bucket_expr(table.bucket_key, table.n_buckets).alias("b")
-                )
-                .distinct()
-                .collect()
-            ]
-        if not buckets:
-            return None
-        df = table.read(self.spark, buckets=[int(b) for b in buckets], **kw)
-        return df.join(F.broadcast(keys), key_col, "leftsemi")
+        if buckets is not None:
+            buckets = sorted({int(b) for b in buckets})
+        df = table.read(self.spark, buckets=buckets, exclude_batch_ids=[batch_id])
+        return keep_keys(df, table.bucket_key, keys)
 
-    def _transcripts_for(
-        self, ids: DataFrame, buckets: list | None = None
-    ) -> DataFrame:
-        # Bucket-prune the lake read when its bucket key IS the conv id
-        # (the CDC default layout); otherwise the semi-join alone prunes
-        # via the broadcast build side. ``buckets``: precomputed bucket-id
-        # set (same observation ride-along contract as ``_pruned``).
+    def _transcripts_for(self, ids, buckets) -> DataFrame:
+        """Reassembled transcripts of the driver-held conv ``ids``
+        (``buckets``: their lake buckets, when the lake is bucketed by conv)."""
         kw = {}
         if self.lake.bucket_key == self.conv_col:
-            if buckets is None:
-                buckets = [
-                    r["b"]
-                    for r in ids.select(
-                        bucket_expr(
-                            self.lake.bucket_key, self.lake.n_buckets
-                        ).alias("b")
-                    )
-                    .distinct()
-                    .collect()
-                ]
-            kw["buckets"] = [int(b) for b in buckets]
-        state = self.lake.read(self.spark, **kw).join(
-            F.broadcast(ids), self.conv_col, "leftsemi"
-        )
+            kw["buckets"] = sorted({int(b) for b in buckets})
+        state = keep_keys(self.lake.read(self.spark, **kw), self.conv_col, ids)
         return transcripts_as_documents(state, conv_col=self.conv_col)
 
     def _flag_docs(self, docs: DataFrame) -> DataFrame:
@@ -314,433 +286,253 @@ class LiveCuration:
         ``min(apply watermark, curation watermark)`` and replays close the
         gap. Pick ONE mode per index (WAL-lsn or internal counter): the
         stamps share the verdicts table's ``_lsn`` ordering."""
-        from pyspark.sql import Observation
+        import concurrent.futures as _cf
+
+        import numpy as np
+        import pandas as pd
 
         c = self.conv_col
         if batch_id in self.verdicts.committed_batches():
             return {"batch_id": batch_id, "replay": True}
+        vb = bucket_expr(c, self.verdicts.n_buckets).alias("_vb")
+        lb = bucket_expr(c, self.lake.n_buckets).alias("_lb")
+        fb = bucket_expr("fingerprint", self.exact.n_buckets).alias("_fb")
         if isinstance(changed_ids, DataFrame):
-            ids = changed_ids.select(F.col(c).cast("string")).distinct()
+            ids_df = changed_ids.select(F.col(c).cast("string").alias(c))
         else:
-            ids = self.spark.createDataFrame(
-                [(str(i),) for i in sorted(set(changed_ids))], f"{c} string"
+            ids_df = self.spark.createDataFrame(
+                pd.DataFrame({c: sorted({str(i) for i in changed_ids})}), f"{c} string"
             )
-        # stats counts AND bucket-id sets ride the materialization actions
-        # (Observation) — refresh never runs a separate count() job, and no
-        # pruned read pays a standalone bucket-collect job either: the
-        # collect_set(bucket_expr) metrics below are bounded by n_buckets
-        # (the r5 ~30s/batch fixed cost was almost entirely driver-side job
-        # scheduling of such probes)
-        v_bucket = bucket_expr(self.verdicts.bucket_key, self.verdicts.n_buckets)
-        obs_ids = Observation()
-        id_mets = [
-            F.count("*").alias("n"),
-            F.collect_set(v_bucket).alias("_vb"),
-        ]
-        if self.lake.bucket_key == c:
-            id_mets.append(
-                F.collect_set(
-                    bucket_expr(self.lake.bucket_key, self.lake.n_buckets)
-                ).alias("_lb")
-            )
-        ids = materialize(ids.observe(obs_ids, *id_mets))
-        m_ids = obs_ids.get
+        # -- 1. the changed set, with its bucket ids in each conv-keyed store
+        ids = ids_df.select(c, vb, lb).toArrow().to_pandas().drop_duplicates(c)
+        where = ids.set_index(c)[["_vb", "_lb"]]
 
-        # -- 1. old verdict rows + new transcripts of the changed convs --
-        old = self._pruned(
-            self.verdicts, ids, c, buckets=m_ids["_vb"],
-            exclude_batch_ids=[batch_id],
-        )
-        new = materialize(
-            self._flag_docs(self._transcripts_for(ids, buckets=m_ids.get("_lb")))
-        )
-        # lazy: derived from two checkpointed frames; its count rides the
-        # pop materialization below (the r6 first pass paid a standalone
-        # materialize + count action here)
-        deleted = (
-            ids.join(new.select(c), c, "left_anti")
-            if old is None
-            else ids.join(new.select(c), c, "left_anti").join(
-                old.select(c), c, "leftsemi"
-            )
-        )
-
-        # -- 2. exact-index membership diff (quality-passers only) --
-        # one materialized DELTA frame (side flag _rm) replaces the r5
-        # to_remove/to_add/affected_fps triple materialization + two counts;
-        # the side counts ride the same action via Observation
-        new_m = new.where("quality_pass").select(c, "fingerprint")
-        if old is not None:
-            old_m = old.where("quality_pass").select(c, "fingerprint")
-        else:
-            old_m = new_m.limit(0)
-        obs_delta = Observation()
-        delta = materialize(
-            old_m.join(new_m, [c, "fingerprint"], "left_anti")
-            .withColumn("_rm", F.lit(True))
-            .unionByName(
-                new_m.join(old_m, [c, "fingerprint"], "left_anti").withColumn(
-                    "_rm", F.lit(False)
+        # -- 2. their new transcripts (per-doc flags + band keys) and their
+        #       old verdict rows, two independent lookups run side by side
+        def new_docs():
+            docs = self._flag_docs(self._transcripts_for(ids[c], ids["_lb"]))
+            # the band-key hashing is the batch's heaviest per-row work and
+            # the reassembled transcripts arrive coalesced into a task or
+            # two: spread them over the cores first
+            docs = docs.repartition(self.spark.sparkContext.defaultParallelism)
+            return (
+                self.near.with_band_keys(docs)
+                .select(
+                    c, "quality_pass", "decont_pass", "fingerprint", "text_hash", "_bks", fb
                 )
+                .toArrow()
+                .to_pandas()
             )
-            .observe(
-                obs_delta,
-                F.count("*").alias("n"),
-                F.collect_set(
-                    bucket_expr(self.exact.bucket_key, self.exact.n_buckets)
-                ).alias("_fb"),
-            )
+
+        def old_rows():
+            old = self._lookup(self.verdicts, ids[c], ids["_vb"], batch_id)
+            if old is None:
+                old = self._empty_verdicts()
+                return to_arrow_schema(old.select("*", fb).schema).empty_table().to_pandas()
+            return old.select("*", fb).toArrow().to_pandas()
+
+        with _cf.ThreadPoolExecutor(max_workers=2) as pool:
+            f_new, f_old = pool.submit(new_docs), pool.submit(old_rows)
+            new, old = f_new.result(), f_old.result()
+
+        # -- 3. exact-index membership delta (quality passers only): commit
+        #       it, then the keepers of the affected fingerprints from the
+        #       pre-batch state + delta (the window merge makes that equal to
+        #       the post-commit state; the lookup excludes this batch)
+        key = [c, "fingerprint"]
+        diff = old[old["quality_pass"]][key + ["_fb"]].merge(
+            new[new["quality_pass"]][key + ["_fb"]],
+            on=key, how="outer", indicator=True, suffixes=("_o", "_n"),
         )
-        to_remove = delta.where("_rm").drop("_rm")
-        to_add = delta.where("NOT _rm").drop("_rm")
-        affected_fps = delta.select("fingerprint").distinct()
-        m_delta = obs_delta.get
-        n_delta = int(m_delta["n"] or 0)
-        exact_fut = None
+        to_rm = diff[diff["_merge"] == "left_only"][key]
+        to_add = diff[diff["_merge"] == "right_only"][key]
+        n_delta = len(to_rm) + len(to_add)
         if n_delta and batch_id not in self.exact.committed_batches():
-            import concurrent.futures as _cf
-
             seq = self.exact.watermark() + 1
-            frame = self._internals(to_remove, batch_id, seq, True).unionByName(
-                self._internals(to_add, batch_id, seq, False)
+            rows = pd.concat(
+                [to_rm.assign(_deleted=True), to_add.assign(_deleted=False)],
+                ignore_index=True,
             )
-            # the commit no longer gates anything (keepers are computed
-            # from the pre-state + delta below, which the window merge
-            # makes exactly equal to the post-commit state), so its stage
-            # write runs CONCURRENTLY with the near-index folds (FIFO
-            # back-fill); joined before the verdicts completion marker.
-            exact_pool = _cf.ThreadPoolExecutor(max_workers=1)
-            exact_fut = exact_pool.submit(
-                self.exact.commit, frame, batch_id, seq, seq, None,
-                mode="append",
+            frame = self.spark.createDataFrame(
+                rows, f"{c} string, fingerprint string, _deleted boolean"
             )
-            exact_pool.shutdown(wait=False)
+            self.exact.commit(
+                self._internals(frame, batch_id, seq),
+                batch_id, seq, seq, None, mode="append",
+            )
+        affected = diff[diff["_merge"] != "both"]
+        fps = affected["fingerprint"].unique()
+        pre = self._lookup(
+            self.exact, fps,
+            pd.concat([affected["_fb_o"], affected["_fb_n"]]).dropna(), batch_id,
+        )
+        members = pd.DataFrame({c: [], "fingerprint": []}, dtype=object)
+        if pre is not None:
+            pre = pre.select(c, "fingerprint", vb, lb).toArrow().to_pandas()
+            where = pd.concat([where, pre.set_index(c)[["_vb", "_lb"]]])
+            members = pre[key]
+        members = (
+            pd.concat([members, to_add])
+            .merge(to_rm.assign(_gone=True), on=key, how="left")
+        )
+        members = members[members["_gone"].isna()][key].drop_duplicates().sort_values(c)
+        keeper = members.groupby("fingerprint")[c].transform("first")  # the min id
+        m_exact = pd.Series((members[c] == keeper).to_numpy(), index=members[c])
+        where = where[~where.index.duplicated()]
 
-        # -- keepers of the affected fingerprints: pre-batch state + delta.
-        # post-commit live membership == (pre-live \ to_remove) ∪ to_add
-        # (tombstones kill per-key predecessors, appends add/resurrect —
-        # the window merge per (fingerprint, conv) key guarantees it), so
-        # no read-after-write barrier; replay reads the same pre state
-        # because the pruned read excludes this batch id.
-        pre = self._pruned(
-            self.exact, affected_fps, "fingerprint", buckets=m_delta["_fb"],
-            exclude_batch_ids=[batch_id],
+        # -- 4. the old verdict rows of affected members outside the batch
+        others = np.setdiff1d(members[c].unique(), ids[c])
+        base = old.drop(columns="_fb")
+        extra = self._lookup(
+            self.verdicts, others, where.loc[others, "_vb"], batch_id
         )
-        base_m = (
-            pre.select(c, "fingerprint")
-            if pre is not None
-            else to_add.limit(0)
-        )
-        live = (
-            base_m.join(to_remove, [c, "fingerprint"], "left_anti")
-            .unionByName(to_add)
-            .distinct()
-        )
-        w_keep = live.groupBy("fingerprint").agg(F.min(c).alias("_keep_id"))
-        obs_mem = Observation()
-        members = materialize(
-            live.join(w_keep, "fingerprint")
-            .select(
-                c,
-                "fingerprint",
-                (F.col(c) == F.col("_keep_id")).alias("exact_keep"),
-            )
-            .observe(obs_mem, F.collect_set(v_bucket).alias("_vb"))
-        )
+        if extra is not None:
+            base = pd.concat([base, extra.toArrow().to_pandas()])
 
-        # -- 3. near-population diff over changed ∪ affected-fp members --
-        # lazy: both inputs are checkpointed, every consumer re-derives the
-        # tiny union instead of paying another materialization action; its
-        # verdict-bucket set is the union of the inputs' observed sets
-        scope = ids.unionByName(members.select(c)).distinct()
-        scope_buckets = sorted(set(m_ids["_vb"]) | set(obs_mem.get["_vb"]))
-        base = self._pruned(
-            self.verdicts, scope, c, buckets=scope_buckets,
-            exclude_batch_ids=[batch_id],
+        # -- 5. per scope conv: the near-population diff and the verdict,
+        #       resolved in the funnel's order. pop_new: an affected-fp
+        #       membership verdict wins; else a deleted conv is out; else a
+        #       changed conv that now fails quality is out; else nothing
+        #       about its exact standing changed (pop_old carries).
+        scope = pd.Index(np.union1d(ids[c], members[c].unique()), name=c)
+        n = _nullable(new.drop(columns="_fb")).set_index(c).reindex(scope)
+        b = _nullable(base).set_index(c).reindex(scope)
+        has_b = b["text_hash"].notna().to_numpy()
+        is_new = n["text_hash"].notna().to_numpy()
+        deleted = scope.isin(ids[c]) & ~is_new & has_b
+        n_q = n["quality_pass"].fillna(False).to_numpy(bool)
+        b_q = b["quality_pass"].fillna(False).to_numpy(bool)
+        b_e = b["exact_keep"].fillna(False).to_numpy(bool)
+        b_n = b["near_keep"].fillna(False).to_numpy(bool)
+        b_d = b["decont_pass"].fillna(True).to_numpy(bool)
+        has_m = scope.isin(m_exact.index)
+        m_e = m_exact.reindex(scope, fill_value=False).to_numpy(bool)
+        pop_old = b_q & b_e
+        pop_new = np.where(
+            has_m, m_e, ~deleted & ~(is_new & ~n_q) & pop_old
         )
-        if base is None:
-            base = self._empty_verdicts()
-        # pop_new resolution order: membership verdict of an affected
-        # fingerprint wins; else a deleted conv is out; else a changed conv
-        # that now fails quality is out; else nothing about the conv's
-        # exact standing changed — carry pop_old (covers a changed conv
-        # whose NORMALIZED text, hence fingerprint, is unchanged).
-        pop = (
-            scope.join(
-                base.select(
-                    c,
-                    (F.col("quality_pass") & F.col("exact_keep")).alias("_pop_old"),
-                    F.col("text_hash").alias("_th_old"),
-                ),
-                c,
-                "left",
-            )
-            .join(members.select(c, F.col("exact_keep").alias("_m_pop")), c, "left")
-            .join(
-                new.select(
-                    c,
-                    F.col("text_hash").alias("_th_new"),
-                    F.col("quality_pass").alias("_n_q"),
-                ),
-                c,
-                "left",
-            )
-            .join(deleted.withColumn("_del", F.lit(True)), c, "left")
-            .select(
-                c,
-                F.coalesce("_pop_old", F.lit(False)).alias("pop_old"),
-                F.coalesce(
-                    "_m_pop",
-                    F.when(F.col("_del"), F.lit(False)),
-                    F.when(F.col("_th_new").isNotNull() & ~F.col("_n_q"), F.lit(False)),
-                    "_pop_old",
-                    F.lit(False),
-                ).alias("pop_new"),
-                (
-                    F.col("_th_new").isNotNull()
-                    & ~F.col("_th_new").eqNullSafe(F.col("_th_old"))
-                ).alias("text_changed"),
-                F.col("_th_new").isNotNull().alias("_in_new"),
-                # carried so the verdict merge reuses it instead of joining
-                # the lazy `deleted` a second time; its sum is n_deleted
-                F.coalesce("_del", F.lit(False)).alias("_del"),
-            )
-        )
-        # ONE action: the rm/add/extra branch decisions AND the deleted
-        # count ride the pop materialization as observed sums (r5 paid
-        # three limit(1).count() probe jobs + two extra materializations
-        # here, the r6 first pass still a standalone `deleted` action)
-        rm_cond = F.col("pop_old") & (~F.col("pop_new") | F.col("text_changed"))
-        add_cond = F.col("pop_new") & (~F.col("pop_old") | F.col("text_changed"))
-        obs_pop = Observation()
-        pop = materialize(
-            pop.observe(
-                obs_pop,
-                F.sum(rm_cond.cast("long")).alias("n_rm"),
-                F.sum(add_cond.cast("long")).alias("n_add"),
-                F.sum((add_cond & ~F.col("_in_new")).cast("long")).alias("n_extra"),
-                F.sum(F.col("_del").cast("long")).alias("n_del"),
-            )
-        )
-        pop_stats = obs_pop.get
-        near_rm = pop.where(rm_cond).select(c)
-        near_add_ids = pop.where(add_cond).select(c)
-        stats_rm = stats_add = None
-        if int(pop_stats["n_rm"] or 0):
-            stats_rm = self.near.remove_docs(near_rm, f"{batch_id}:rm")
-        if int(pop_stats["n_add"] or 0):
-            # entrants pulled in by a keeper flip were not in the CDC batch:
-            # reassemble their transcripts on demand (bounded by affected
-            # fingerprint groups)
-            have = new.join(near_add_ids, c, "leftsemi").select(c, "text")
-            add_docs = have
-            if int(pop_stats["n_extra"] or 0):
-                extra_ids = near_add_ids.join(new.select(c), c, "left_anti")
-                add_docs = have.unionByName(
-                    self._transcripts_for(extra_ids).select(c, "text")
-                )
-            stats_add = self.near.add_batch(add_docs, f"{batch_id}:add")
+        text_changed = is_new & ~(n["text_hash"] == b["text_hash"]).fillna(
+            False
+        ).to_numpy(bool)
+        leave = scope[pop_old & (~pop_new | text_changed)]
+        enter = scope[pop_new & (~pop_old | text_changed)]
 
-        # -- 4. the near label delta: exactly the rows steps 3's commits
-        #       wrote, read back by batch id (never recomputed) --
-        wrote = [
-            b
-            for b in (f"{batch_id}:rm", f"{batch_id}:add")
-            if b in self.near.clusters.committed_batches()
-        ]
-        if wrote:
-            # default (window) merge within the delta: a conv tombstoned by
-            # :rm and re-labeled by :add keeps the live row; tombstone-only
-            # convs drop out (their pop exit sets near_keep below)
-            labels = self.near.clusters.read(
-                self.spark, batch_ids=wrote
-            ).select(c, (F.col("cluster_id") == F.col(c)).alias("_near_new"))
-        else:
-            labels = self._empty_labels()
-        # labels' verdict-bucket set comes free from the folds' own staged
-        # manifests when near.clusters shares the verdicts' bucket layout
-        # (LiveCuration builds both on (conv, n_buckets), so bucket ids map
-        # 1:1) — the staged set covers every row the read-back can return
-        # (the window merge only drops rows), so pruning with it is exact-
-        # or-superset. labels then stays LAZY: it folds into the consumers'
-        # existing actions instead of paying its own materialize+observe.
-        # Fallback (fold replayed after a crash, or a caller overrode the
-        # near index's layout): the old materialize + observed collect_set.
-        st_by_batch = {
-            f"{batch_id}:rm": stats_rm,
-            f"{batch_id}:add": stats_add,
-        }
-        lab_buckets_known = (
-            self.near.clusters.bucket_key == self.verdicts.bucket_key
-            and self.near.clusters.n_buckets == self.verdicts.n_buckets
-            and all(
-                (st_by_batch[b] or {}).get("label_buckets") is not None
-                for b in wrote
-            )
-        )
-        if lab_buckets_known:
-            lab_vb = sorted(
-                {
-                    int(x)
-                    for b in wrote
-                    for x in st_by_batch[b]["label_buckets"]
-                }
-            )
-        else:
-            obs_lab = Observation()
-            labels = materialize(
-                labels.observe(obs_lab, F.collect_set(v_bucket).alias("_vb"))
-            )
-            lab_vb = obs_lab.get["_vb"]
-
-        # -- 5. verdict upsert: every conv whose flags changed --
-        # lazy union of checkpointed frames (same rationale as scope)
-        scope_all = scope.unionByName(labels.select(c)).distinct()
-        base_all = self._pruned(
-            self.verdicts, scope_all, c,
-            buckets=sorted(set(scope_buckets) | set(lab_vb)),
-            exclude_batch_ids=[batch_id],
-        )
-        if base_all is None:
-            base_all = self._empty_verdicts()
-        b = base_all.select(
-            c,
-            *[F.col(f).alias(f"_b_{f}") for f in RAW_FLAGS],
-            F.col("fingerprint").alias("_b_fp"),
-            F.col("text_hash").alias("_b_th"),
-        )
-        merged = (
-            scope_all.join(b, c, "left")
-            .join(
-                new.select(
-                    c,
-                    F.col("quality_pass").alias("_n_q"),
-                    F.col("decont_pass").alias("_n_d"),
-                    F.col("fingerprint").alias("_n_fp"),
-                    F.col("text_hash").alias("_n_th"),
-                ),
-                c,
-                "left",
-            )
-            .join(members.select(c, F.col("exact_keep").alias("_m_e")), c, "left")
-            .join(labels, c, "left")
-            .join(
-                # _del rides pop (every deleted conv is in scope ⊆ pop; a
-                # labels-only conv outside pop left-joins to null = not
-                # deleted, same as the old second `deleted` join)
-                pop.select(c, "pop_new", "pop_old", "_del"), c, "left"
-            )
-        )
-        is_new = F.col("_n_th").isNotNull()
-        qual = F.when(is_new, F.col("_n_q")).otherwise(
-            F.coalesce("_b_quality_pass", F.lit(False))
-        )
-        # same resolution order as pop_new: affected-fp membership verdict
-        # wins; a changed conv that now fails quality is out; otherwise the
-        # conv's exact standing did not change this batch
-        exact = F.coalesce(
-            "_m_e",
-            F.when(is_new & ~F.col("_n_q"), F.lit(False)),
-            F.col("_b_exact_keep"),
-            F.lit(False),
-        )
-        # near_keep: fresh label if this batch relabeled the conv; False if
-        # it left the population; else carry the old raw flag
-        near = F.coalesce(
-            "_near_new",
-            F.when(
-                F.coalesce("pop_old", F.lit(False))
-                & ~F.coalesce("pop_new", F.lit(False)),
-                F.lit(False),
-            ),
-            F.col("_b_near_keep"),
-            F.lit(False),
-        )
-        dec = F.when(is_new, F.col("_n_d")).otherwise(
-            F.coalesce("_b_decont_pass", F.lit(True))
-        )
-        out = merged.select(
-            c,
-            qual.alias("quality_pass"),
-            exact.alias("exact_keep"),
-            near.alias("near_keep"),
-            dec.alias("decont_pass"),
-            F.when(is_new, F.col("_n_fp")).otherwise(F.col("_b_fp")).alias(
-                "fingerprint"
-            ),
-            F.when(is_new, F.col("_n_th")).otherwise(F.col("_b_th")).alias(
-                "text_hash"
-            ),
-            F.coalesce("_del", F.lit(False)).alias("_is_del"),
-            # write only rows that changed (or are brand new / deleted)
-            (
-                F.col("_b_th").isNull()
-                | F.coalesce("_del", F.lit(False))
-                | ~F.struct(qual, exact, near, dec).eqNullSafe(
-                    F.struct(
-                        F.coalesce("_b_quality_pass", F.lit(False)),
-                        F.coalesce("_b_exact_keep", F.lit(False)),
-                        F.coalesce("_b_near_keep", F.lit(False)),
-                        F.coalesce("_b_decont_pass", F.lit(True)),
+        # -- 6. ONE near-index delta fold; entrants pulled in by a keeper
+        #       flip were not in the batch: their band keys come from an
+        #       on-demand transcript read bounded by the affected groups
+        near_stats, labels = None, None
+        if len(leave) or len(enter):
+            bks = n.loc[enter.intersection(n.index[is_new]), ["_bks"]]
+            pulled = enter.difference(bks.index)
+            if len(pulled):
+                got = (
+                    self.near.with_band_keys(
+                        self._transcripts_for(pulled, where.loc[pulled, "_lb"])
                     )
+                    .select(c, "_bks")
+                    .toArrow()
+                    .to_pandas()
+                    .set_index(c)
                 )
-                | ~F.col("_n_th").eqNullSafe(F.col("_b_th")) & is_new
-            ).alias("_dirty"),
+                bks = pd.concat([bks, got])
+            band_rows = pd.DataFrame(
+                [
+                    (cid, i, k)
+                    for cid, keys in bks["_bks"].items()
+                    for i, k in enumerate(keys)
+                ],
+                columns=[c, "band_idx", "band_key"],
+            )
+            near_stats, labels = self.near.fold(leave, band_rows, batch_id)
+            if labels is None:
+                # a fold replayed after a crash, or the distributed fold:
+                # its label rows are read back by batch id
+                labels = (
+                    self.near.clusters.read(self.spark, batch_ids=[batch_id])
+                    .select(c, "cluster_id")
+                    .toArrow()
+                    .to_pandas()
+                )
+        if labels is None:
+            labels = pd.DataFrame({c: [], "cluster_id": []}, dtype=object)
+        near_new = pd.Series(
+            (labels[c] == labels["cluster_id"]).to_numpy(bool), index=labels[c]
         )
-        if exact_fut is not None:
-            # the exact commit must land before the verdicts commit (the
-            # refresh completion marker); surfacing its error here keeps
-            # the crash-window contract (verdicts never marks a batch done
-            # over a failed sub-commit)
-            exact_fut.result()
-        # The dirty rows feed exactly ONE consumer (the verdicts commit), so
-        # they are never materialized: the commit's own stage action is the
-        # only job over this plan, ``_deleted`` is the carried ``_is_del``
-        # column (value-identical to the former two-filter union through
-        # ``_internals``, same column order), and the write count comes free
-        # from the staged files' stats instead of a standalone
-        # materialize+Observation action.
-        n_writes = 0
-        if batch_id not in self.verdicts.committed_batches():
-            seq = (
-                self.verdicts.watermark() + 1 if lsn_hi is None else int(lsn_hi)
+
+        # -- 7. the verdict upsert: every scope conv whose row changed, plus
+        #       the near-label delta's convs outside the scope
+        has_l = scope.isin(near_new.index)
+        q = np.where(is_new, n_q, b_q)
+        e = np.where(has_m, m_e, ~(is_new & ~n_q) & b_e)
+        nk = np.where(
+            has_l,
+            near_new.reindex(scope, fill_value=False).to_numpy(bool),
+            ~(pop_old & ~pop_new) & b_n,
+        )
+        d = np.where(is_new, n["decont_pass"].fillna(True).to_numpy(bool), b_d)
+        changed = (q != b_q) | (e != b_e) | (nk != b_n) | (d != b_d)
+        # a conv with neither a transcript nor an old verdict (inserted and
+        # deleted inside this batch) writes nothing
+        dirty = (is_new & (~has_b | text_changed)) | deleted | (has_b & changed)
+        rows = pd.DataFrame(
+            {
+                c: scope,
+                "quality_pass": q,
+                "exact_keep": e,
+                "near_keep": nk,
+                "decont_pass": d,
+                "fingerprint": n["fingerprint"].where(is_new, b["fingerprint"]),
+                "text_hash": n["text_hash"].where(is_new, b["text_hash"]),
+                "_deleted": deleted,
+            },
+            index=scope,
+        )[dirty]
+        writes = self.spark.createDataFrame(
+            rows.astype({"text_hash": "int64", "fingerprint": object}),
+            self._empty_verdicts().schema.add("_deleted", "boolean"),
+        )
+        outside = near_new[~near_new.index.isin(scope)]
+        if len(outside):
+            vl = self.verdicts
+            lab_vb = (near_stats or {}).get("label_buckets")
+            same_layout = (
+                self.near.clusters.bucket_key == vl.bucket_key
+                and self.near.clusters.n_buckets == vl.n_buckets
             )
-            writes = out.where("_dirty")
-            frame = writes.select(
-                *[n for n in writes.columns if n not in ("_is_del", "_dirty")],
-                F.lit(seq).cast("long").alias("_lsn"),
-                F.timestamp_seconds(F.lit(seq)).alias("_mts"),
-                F.col("_is_del").alias("_deleted"),
-                F.lit(batch_id).alias("_batch"),
+            flips = self.spark.createDataFrame(
+                pd.DataFrame({c: outside.index, "_nk": outside.to_numpy(bool)}),
+                f"{c} string, _nk boolean",
             )
-            staged = self.verdicts.stage(frame, batch_id)
-            n_writes = sum(
-                int(s["n_rows"]) for s in staged["bucket_stats"].values()
+            writes = writes.unionByName(
+                self._lookup(vl, outside.index, lab_vb if same_layout else None, batch_id)
+                .join(F.broadcast(flips), c)
+                .where(F.col("near_keep") != F.col("_nk"))
+                .withColumn("near_keep", F.col("_nk"))
+                .select(*writes.columns[:-1], F.lit(False).alias("_deleted"))
             )
-            self.verdicts.commit_staged(
-                staged, batch_id, seq, seq, None, mode="append"
-            )
+        seq = self.verdicts.watermark() + 1 if lsn_hi is None else int(lsn_hi)
+        staged = self.verdicts.stage(
+            self._internals(writes, batch_id, seq), batch_id
+        )
+        n_writes = sum(int(s["n_rows"]) for s in staged["bucket_stats"].values())
+        self.verdicts.commit_staged(staged, batch_id, seq, seq, None, mode="append")
         return {
             "batch_id": batch_id,
             "replay": False,
-            # observed on the frames' own materialization actions — no
-            # separate count() jobs
-            "n_changed": int(m_ids["n"] or 0),
-            "n_deleted": int(pop_stats["n_del"] or 0),
+            "n_changed": len(ids),
+            "n_deleted": int(deleted.sum()),
             "n_exact_delta": n_delta,
-            "near_rm": (stats_rm or {}).get("fold"),
-            "near_add": (stats_add or {}).get("fold"),
+            "near": (near_stats or {}).get("fold"),
             "n_verdict_writes": n_writes,
         }
 
-    def _internals(
-        self, df: DataFrame, batch_id: str, seq: int, deleted: bool
-    ) -> DataFrame:
+    def _internals(self, df: DataFrame, batch_id: str, seq: int) -> DataFrame:
+        """Stamp a commit frame that carries its own ``_deleted`` flag."""
         return df.select(
-            "*",
+            *[x for x in df.columns if x != "_deleted"],
             F.lit(seq).cast("long").alias("_lsn"),
             F.timestamp_seconds(F.lit(seq)).alias("_mts"),
-            F.lit(deleted).alias("_deleted"),
+            "_deleted",
             F.lit(batch_id).alias("_batch"),
         )
 
@@ -750,11 +542,6 @@ class LiveCuration:
             f"{self.conv_col} string, quality_pass boolean, exact_keep boolean,"
             " near_keep boolean, decont_pass boolean, fingerprint string,"
             " text_hash long",
-        )
-
-    def _empty_labels(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [], f"{self.conv_col} string, _near_new boolean"
         )
 
     # ---------------- the user-facing view ----------------

@@ -17,6 +17,9 @@ NEAR = BASE.replace("afternoon", "morning")
 # near-index params matching minhash_candidates' defaults, so the live
 # index and the one-shot funnel compute the same candidate pairs
 IDX = {"k_shingle": 12, "n_hashes": 8, "n_bands": 4}
+# Spark jobs of one incremental refresh in test_refresh_job_budget, as
+# measured (the count repeats exactly from run to run)
+JOB_BUDGET = 31
 
 
 def _commit_state(spark, table, rows, batch_id, seq):
@@ -136,44 +139,117 @@ def test_live_equals_one_shot_through_mutations(spark, setup, tmp_path):
     assert _rows(lc.verdicts_df()) == _rows(one2)
 
 
-def test_crash_between_commits_resumes(spark, setup, tmp_path):
-    lake, evalset, lc = setup
+def _mutations(spark, lake, lc):
+    """Batch 1 (the full funnel spectrum) refreshed; batch 2 (keeper
+    takedown, text edits, a new conv) committed to the lake only. Batch 2's
+    refresh publishes all four sub-commits: exact, near.bands,
+    near.clusters and verdicts."""
     _commit_state(
         spark,
         lake,
         [
-            ("x1", 0, "user", BASE, False),
-            ("x2", 0, "user", BASE, False),
-            ("y1", 0, "user", GOOD, False),
+            ("a1", 0, "user", BASE, False),
+            ("a2", 0, "user", BASE, False),
+            ("b1", 0, "user", NEAR, False),
+            ("c1", 0, "user", GOOD, False),
+            ("j1", 0, "user", JUNK, False),
+            ("e1", 0, "user", CONTAMINATED, False),
         ],
         "b1",
         1,
     )
-    lc.refresh(["x1", "x2", "y1"], "cdc-1")
+    lc.refresh(["a1", "a2", "b1", "c1", "j1", "e1"], "cdc-1")
+    _commit_state(
+        spark,
+        lake,
+        [
+            ("a1", 0, "user", BASE, True),
+            ("e1", 0, "user", GOOD2, False),
+            ("j1", 0, "user", GOOD2, False),
+            ("d1", 0, "user", NEAR.replace("morning", "evening"), False),
+        ],
+        "b2",
+        2,
+    )
+    return ["a1", "e1", "j1", "d1"]
 
-    # batch 2 crashes AFTER the near-index commits, BEFORE the verdicts
-    # commit — the completion marker is missing, so re-running the same
-    # refresh finishes the fold (landed sub-commits replay-skip)
-    _commit_state(spark, lake, [("x1", 0, "user", BASE, True)], "b2", 2)
-    # the verdicts publish point is stage()+commit_staged(); crashing the
-    # atomic publish leaves staged-but-unreferenced files, the strictest
-    # crash window (files on disk, completion marker missing)
-    real_commit = lc.verdicts.commit_staged
 
-    def boom(*a, **kw):
-        raise RuntimeError("injected crash before verdicts commit")
+def test_crash_between_commits_resumes(spark, setup, tmp_path):
+    """A crash at EACH publish point of the refresh (exact, near.bands,
+    near.clusters, verdicts) resumes, by re-running the same refresh, to the
+    one-shot verdicts: landed sub-commits replay-skip, pending ones are
+    recomputed from the same pre-batch snapshot. The publish point is
+    stage()+commit_staged(); crashing the atomic publish leaves staged but
+    unreferenced files, the strictest crash window."""
+    from endor_blockchain_data_pipeline_spark.operators.live_curation import (
+        LiveCuration,
+    )
+    from endor_blockchain_data_pipeline_spark.sources.lake import ManifestTable
 
-    lc.verdicts.commit_staged = boom
-    with pytest.raises(RuntimeError, match="injected"):
-        lc.refresh(["x1"], "cdc-2")
-    lc.verdicts.commit_staged = real_commit
+    _, evalset, _ = setup
+    for point in ("exact", "near.bands", "near.clusters", "verdicts"):
+        lake = ManifestTable(str(tmp_path / point / "lake"), n_buckets=4)
+        lc = LiveCuration(spark, str(tmp_path / point / "cur"), lake, evalset, **IDX)
+        changed = _mutations(spark, lake, lc)
+        table = {
+            "exact": lc.exact,
+            "near.bands": lc.near.bands,
+            "near.clusters": lc.near.clusters,
+            "verdicts": lc.verdicts,
+        }[point]
 
-    st = lc.refresh(["x1"], "cdc-2")
-    assert not st["replay"]
+        def boom(*a, **kw):
+            raise RuntimeError(f"injected crash before the {point} commit")
+
+        table.commit_staged = boom
+        with pytest.raises(RuntimeError, match="injected"):
+            lc.refresh(changed, "cdc-2")
+        del table.commit_staged  # back to the class method
+        assert "cdc-2" not in table.committed_batches()
+
+        st = lc.refresh(changed, "cdc-2")
+        assert not st["replay"]
+        one = _one_shot(spark, lake, evalset, str(tmp_path / point / "os"))
+        assert _rows(lc.verdicts_df()) == _rows(one), point
+        v = {r["conv_id"]: r for r in lc.verdicts_df().collect()}
+        assert "a1" not in v and v["a2"]["final_keep"], point
+
+
+def test_refresh_job_budget(spark, setup):
+    """One incremental refresh (leavers, entrants, a keeper-flip entrant
+    outside the batch, exact and near deltas) runs at most this many Spark
+    jobs; a change that re-adds probe or materialization actions fails
+    here."""
+    lake, _, lc = setup
+    changed = _mutations(spark, lake, lc)
+    sc = spark.sparkContext
+    # jobs on this thread would land in its job group, if one is set; the
+    # refresh's pool threads have none
+    group = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    try:
+        st = lc.refresh(changed, "cdc-2")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", group)
+    n_jobs = len(set(tracker.getJobIdsForGroup(None)) - before)
+    assert not st["replay"] and st["near"] == "driver-union-find"
+    assert 0 < n_jobs <= JOB_BUDGET, n_jobs
+
+
+def test_no_verdict_for_conv_born_and_deleted_in_batch(spark, setup, tmp_path):
+    """A conversation inserted and fully deleted inside one batch has no
+    transcript and never had a verdict: the refresh writes nothing for it."""
+    lake, evalset, lc = setup
+    _commit_state(spark, lake, [("c1", 0, "user", GOOD, False)], "b1", 1)
+    lc.refresh(["c1"], "cdc-1")
+    _commit_state(spark, lake, [("g1", 0, "user", GOOD2, True)], "b2", 2)
+    st = lc.refresh(["g1"], "cdc-2")
+    assert st["n_verdict_writes"] == 0
+    assert "g1" not in {r["conv_id"] for r in lc.verdicts_df().collect()}
     one = _one_shot(spark, lake, evalset, str(tmp_path / "os"))
     assert _rows(lc.verdicts_df()) == _rows(one)
-    v = {r["conv_id"]: r for r in lc.verdicts_df().collect()}
-    assert v["x2"]["final_keep"] and "x1" not in v
 
 
 def test_cdc_driven_live_curation(spark, tmp_path):

@@ -196,6 +196,35 @@ def test_minhash_xxhash64_fast_path_equivalent_recall(spark, docs):
     assert "HashAggregate" in physical_plan(dsigs)
 
 
+@pytest.mark.parametrize("hash_fn", ["md5_long", "md5", "xxhash64"])
+def test_row_local_band_keys_equal_grouped_bands(spark, docs, hash_fn):
+    """``with_band_keys`` (row-local, used by the live near index) and
+    ``lsh_bands(minhash_signatures(..))`` (explode + groupBy, used by the
+    one-shot funnel) give bit-identical band keys — including texts shorter
+    than a shingle, the empty text and a null text."""
+    from endor_blockchain_data_pipeline_spark.operators.dedup import (
+        lsh_bands,
+        minhash_signatures,
+        with_band_keys,
+    )
+
+    edge = spark.createDataFrame(
+        [(900, "short"), (901, ""), (902, None), (903, "exactly8")],
+        "doc_id long, text string",
+    )
+    corpus = docs.unionByName(edge)
+    grouped = lsh_bands(
+        minhash_signatures(corpus, k_shingle=8, n_hashes=8, hash_fn=hash_fn),
+        n_bands=4,
+    )
+    row_local = with_band_keys(
+        corpus, "text", "_bks", k_shingle=8, n_hashes=8, n_bands=4, hash_fn=hash_fn
+    ).select("doc_id", F.posexplode("_bks").alias("band_idx", "band_key"))
+    want = sorted(tuple(r) for r in grouped.collect())
+    assert sorted(tuple(r) for r in row_local.collect()) == want
+    assert {r[0] for r in want} >= {900, 901, 902, 903}
+
+
 def test_lsh_bucket_cap_defuses_giant_bucket(spark, docs):
     """A degenerate all-identical cluster (one giant LSH bucket) is dropped
     by the size cap; genuine near-dup pairs below the cap survive."""

@@ -115,6 +115,30 @@ def test_collect_failure_falls_back_to_distributed(spark, tmp_path, monkeypatch)
     assert _rows(t.read(spark, with_internal=True)) == _rows(df)
 
 
+def test_non_size_collect_failure_raises(spark, tmp_path, monkeypatch):
+    """Only the driver result-size cap falls back to the distributed write;
+    any other staging failure propagates and publishes no manifest."""
+    t = ManifestTable(
+        str(tmp_path / "t"),
+        n_buckets=8,
+        key_cols=("conv_id",),
+        bucket_key="conv_id",
+        small_commit_rows=10,
+    )
+    df = _frame(spark, n=100)
+
+    def boom(self):
+        raise OSError(28, "No space left on device (simulated)")
+
+    # patch the concrete frame class (the session's DataFrame subclass
+    # overrides the base class's toArrow)
+    monkeypatch.setattr(type(df), "toArrow", boom)
+    with pytest.raises(OSError, match="No space left"):
+        t.commit(df, "b1", 1, 100, None, mode="append")
+    assert t.manifest() is None
+    assert "b1" not in t.committed_batches()
+
+
 def test_live_curation_modes_equal(spark, tmp_path):
     """End-to-end: verdicts identical with small commits on vs off."""
     from endor_blockchain_data_pipeline_spark.job import CDCJob
@@ -136,3 +160,31 @@ def test_live_curation_modes_equal(spark, tmp_path):
         verdicts[mode] = _rows(lc.verdicts_df())
     assert verdicts["fast"] == verdicts["slow"]
     assert len(verdicts["fast"]) > 0
+
+
+def test_keep_keys_in_list_and_broadcast_agree(spark, monkeypatch):
+    """Driver-held key lookups: the SQL IN-list (quotes and backslashes in
+    string keys escaped) and the broadcast semi-join beyond
+    ISIN_MAX_KEYS return the same rows."""
+    from endor_blockchain_data_pipeline_spark.sources import lake
+
+    keys = ["a'b", "c\\d", "plain", "missing"]
+    df = spark.createDataFrame(
+        [(k, i) for i, k in enumerate(["a'b", "c\\d", "plain", "other"])],
+        "k string, v long",
+    )
+    nums = spark.range(10).withColumnRenamed("id", "n")
+    in_list = (_rows(lake.keep_keys(df, "k", keys)), _rows(lake.keep_keys(nums, "n", [2, 7])))
+    monkeypatch.setattr(lake, "ISIN_MAX_KEYS", 1)
+    joined = (_rows(lake.keep_keys(df, "k", keys)), _rows(lake.keep_keys(nums, "n", [2, 7])))
+    assert in_list == joined
+    assert in_list == ([("a'b", 0), ("c\\d", 1), ("plain", 2)], [(2,), (7,)])
+    # raw string literals (no escapes) cannot spell a quoted key: the
+    # lookup must not depend on the session's literal parsing
+    monkeypatch.setattr(lake, "ISIN_MAX_KEYS", 100)
+    spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
+    try:
+        raw = (_rows(lake.keep_keys(df, "k", keys)), _rows(lake.keep_keys(nums, "n", [2, 7])))
+    finally:
+        spark.conf.unset("spark.sql.parser.escapedStringLiterals")
+    assert raw == in_list
