@@ -94,6 +94,8 @@ def fanout_batch(
 
     Returns {"state": manifest|None, "tool": ..., "stats": ...} — None for
     sinks that had already committed this batch (idempotent replay skip).
+    ``est_rows`` bounds the batch's rows, so it bounds every sink's rows
+    too (each is a filter or per-conv aggregate of the winners).
     """
     from endor_blockchain_data_pipeline_spark.functions.decode import decode_changes
 
@@ -116,7 +118,7 @@ def fanout_batch(
             new_state = changes_to_state(decoded, batch_id).withColumn(
                 "_bucket", bucket_expr(state_table.bucket_key, state_table.n_buckets)
             )
-            staged = state_table.stage(new_state, batch_id)
+            staged = state_table.stage(new_state, batch_id, est_rows=est_rows)
             results["state"] = commit_staged_batch(
                 state_table, staged, batch_id, lsn_lo, lsn_hi,
                 mode="mor", lineage=lineage,
@@ -125,7 +127,7 @@ def fanout_batch(
             tool_state = changes_to_state(tool_calls_view(decoded), batch_id).withColumn(
                 "_bucket", bucket_expr(tool_table.bucket_key, tool_table.n_buckets)
             )
-            staged = tool_table.stage(tool_state, batch_id)
+            staged = tool_table.stage(tool_state, batch_id, est_rows=est_rows)
             results["tool"] = commit_staged_batch(
                 tool_table, staged, batch_id, lsn_lo, lsn_hi, mode="mor"
             )
@@ -135,7 +137,7 @@ def fanout_batch(
             ).withColumn(
                 "_bucket", bucket_expr(stats_table.bucket_key, stats_table.n_buckets)
             )
-            staged = stats_table.stage(stats_state, batch_id)
+            staged = stats_table.stage(stats_state, batch_id, est_rows=est_rows)
             results["stats"] = commit_staged_batch(
                 stats_table, staged, batch_id, lsn_lo, lsn_hi, mode="mor"
             )

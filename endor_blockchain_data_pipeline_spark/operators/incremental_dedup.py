@@ -111,7 +111,7 @@ class DedupIndex:
         n_buckets: int = 16,
         driver_pair_limit: int | None = None,
         id_type: str = "long",
-        small_commit_rows: int = 0,
+        small_commit_rows: int | None = None,
     ) -> None:
         if id_type not in ("long", "string"):
             raise ValueError(f"id_type must be 'long' or 'string', got {id_type!r}")
@@ -171,9 +171,11 @@ class DedupIndex:
         # (including compaction's) is forced onto the per-key window merge —
         # the lsn-equality broadcast join-back is unsound here and the table
         # itself now refuses it.
-        # small_commit_rows: writer-side fast path for delta-scoped folds
-        # (the live-curation near index) — 0 (default) keeps the commits of
-        # standalone corpus-scale ingestion distributed (see ManifestTable).
+        # small_commit_rows: the row bound up to which a commit stages on
+        # the driver (None: the lake's DRIVER_STAGE_ROW_LIMIT). A driver fold
+        # commits pandas-built frames, whose plans carry their row count;
+        # the distributed folds' frames are unbounded and always stage
+        # distributed (see ManifestTable.stage).
         self.bands = ManifestTable(
             os.path.join(root, "bands"),
             n_buckets=n_buckets,

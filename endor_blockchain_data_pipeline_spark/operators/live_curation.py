@@ -133,7 +133,7 @@ class LiveCuration:
         dup_word_max: float | None = None,
         symbol_ratio_max: float | None = None,
         n_buckets: int = 16,
-        small_commit_rows: int = 1,
+        small_commit_rows: int | None = None,
         **index_params,
     ) -> None:
         self.spark = spark
@@ -173,12 +173,10 @@ class LiveCuration:
             }
             with open(pfile, "w") as fh:
                 json.dump(self.params, fh)
-        # Refresh commits are O(changed conversations + blast radius) by
-        # contract, so the stores stage on the driver (one Arrow collect +
-        # local bucket writes per commit instead of a shuffle+write Spark
-        # job): any small_commit_rows > 0 selects that path, 0 keeps the
-        # distributed write. A collect over the driver's result cap still
-        # falls back to the distributed write.
+        # Refresh commits are built from driver-held deltas, so each passes
+        # its row count; up to small_commit_rows rows (None: the lake's
+        # DRIVER_STAGE_ROW_LIMIT) a store stages on the driver (one Arrow
+        # collect + local bucket writes instead of a shuffle+write job).
         # per-BATCH _lsn on all three stores -> window merge only
         self.exact = ManifestTable(
             os.path.join(root, "exact"),
@@ -358,7 +356,7 @@ class LiveCuration:
             )
             self.exact.commit(
                 self._internals(frame, batch_id, seq),
-                batch_id, seq, seq, None, mode="append",
+                batch_id, seq, seq, None, mode="append", est_rows=len(rows),
             )
         affected = diff[diff["_merge"] != "both"]
         fps = affected["fingerprint"].unique()
@@ -511,8 +509,10 @@ class LiveCuration:
                 .select(*writes.columns[:-1], F.lit(False).alias("_deleted"))
             )
         seq = self.verdicts.watermark() + 1 if lsn_hi is None else int(lsn_hi)
+        # the flips add at most one row per outside conversation
         staged = self.verdicts.stage(
-            self._internals(writes, batch_id, seq), batch_id
+            self._internals(writes, batch_id, seq), batch_id,
+            est_rows=len(rows) + len(outside),
         )
         n_writes = sum(int(s["n_rows"]) for s in staged["bucket_stats"].values())
         self.verdicts.commit_staged(staged, batch_id, seq, seq, None, mode="append")

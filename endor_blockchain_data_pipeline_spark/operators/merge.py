@@ -26,6 +26,14 @@ collect_list-style merges); tests assert both produce identical results.
 Scale: merge cost per batch is O(changed keys + current rows of affected
 buckets). Bucket pruning (manifest file lists) keeps the read side narrow;
 AQE skew-join splitting covers residual join skew.
+
+Staging: every write here hands ``ManifestTable.stage`` the row bound it
+knows before any work runs — a MoR batch its LSN range width, a CoW batch
+the affected buckets' manifest row counts plus its changes, a compaction the
+row counts of the buckets it folds. Up to the lake's measured limit the
+batch is staged on the driver (one Arrow collect of the decoded winners,
+pyarrow writes per bucket); past it, or without a bound, it takes the
+distributed partitioned write.
 """
 
 from __future__ import annotations
@@ -254,19 +262,20 @@ def merge_batch(
     2. **the merge job** (all heavy work, ONE Spark action): decode+normalize
        -> within-batch LWW reduce -> union with the snapshot-read of ONLY the
        affected buckets (tombstones included) -> per-key max_by(lsn, mts)
-       -> bucketed parquet write. No persist, no second pass: every row is
-       decoded exactly once, inside the same whole-stage pipeline that writes.
+       -> bucketed parquet write (driver-staged when the row bound allows).
+       No persist, no second pass: every row is decoded exactly once.
     3. atomic manifest commit replacing the affected buckets.
 
     Skew: both reduces are hash aggregates -> map-side partial aggregation
     collapses hot conversations before the shuffle. ``salted=True`` adds the
     explicit two-phase reduction for payloads too wide to partial-aggregate.
 
+    ``est_rows``: the caller's bound on the batch's rows (the LSN range
+    width of a dense feed); it picks the winner join-back and, for MoR, the
+    staging writer (``ManifestTable.stage``).
+
     Returns the commit manifest dict (timing in stats).
     """
-    import os as _os
-
-    _timing = _os.environ.get("ENDOR_MERGE_TIMING") == "1"
     t0 = time.time()
 
     # -- 1. bucket discovery (CoW only) -------------------------------------
@@ -297,9 +306,6 @@ def merge_batch(
         )
         affected = [r["_bucket"] for r in bucket_rows]
         n_changes = sum(r["n_rows"] for r in bucket_rows)
-        if _timing:
-            print(f"[merge {batch_id}] discovery: {time.time()-t0:.2f}s", flush=True)
-    t1 = time.time()
 
     # -- 2. one fused job: reduce (narrow) -> decode winners -> merge -> write
     if decode_fn is not None:
@@ -320,6 +326,9 @@ def merge_batch(
     )
     if mode == "mor" or table.manifest() is None:
         merged = new_state
+        # winners are at most the batch's rows (CoW's first commit: the
+        # discovery count)
+        bound = est_rows if mode == "mor" else n_changes
     else:
         current = table.read(
             table_spark(new_state), buckets=affected, with_internal=True
@@ -335,10 +344,9 @@ def merge_batch(
             and est + n_changes <= ManifestTable.MERGE_BROADCAST_ROW_LIMIT
         )
         merged = lww_state_merge(combined, strategy="broadcast" if small else "window")
+        bound = est + n_changes if est is not None else None
 
-    staged = table.stage(merged, batch_id)
-    if _timing:
-        print(f"[merge {batch_id}] stage: {time.time()-t1:.2f}s", flush=True)
+    staged = table.stage(merged, batch_id, est_rows=bound)
     return commit_staged_batch(
         table, staged, batch_id, lsn_lo, lsn_hi,
         affected=affected, bucket_rows=bucket_rows, n_changes=n_changes,
@@ -421,7 +429,7 @@ def stage_batch_mor(
     new_state = changes_to_state(reduced, batch_id).withColumn(
         "_bucket", bucket_expr(table.bucket_key, table.n_buckets)
     )
-    return table.stage(new_state, batch_id)
+    return table.stage(new_state, batch_id, est_rows=est_rows)
 
 
 def table_spark(df: DataFrame):
@@ -461,6 +469,10 @@ def compact_buckets(
         replaced_buckets=buckets,
         stats={"compaction": True, "n_buckets_compacted": len(buckets)},
         base_manifest=m,
+        # the fold keeps at most the rows its buckets hold
+        est_rows=ManifestTable._selected_row_estimate(
+            m, {str(int(b)) for b in buckets}
+        ),
     )
 
 
@@ -487,4 +499,5 @@ def compact(table: ManifestTable, spark, batch_id: str) -> dict:
         replaced_buckets=None,
         stats={"compaction": True, "tombstones_dropped": True},
         base_manifest=m,
+        est_rows=ManifestTable._selected_row_estimate(m, None),
     )

@@ -48,6 +48,16 @@ def get_spark(
         # Keep scheduler quiet in tests.
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
+        # Manifest reads hand the scan an explicit file list. Past the stock
+        # 32 paths Spark re-lists them in a parallel job (one task per path);
+        # listing on the driver is cheaper up to at least 4096 paths. Plan
+        # time of a read of N small parquet files, 4-core VM, local[4],
+        # median of 7 (ms):
+        #
+        #   paths           48   128   512  1024  2048  4096
+        #   parallel job   416   891  2974  5308  8300 15013
+        #   driver          51    67   142   286   489   811
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
         # Local mode: generous driver memory (the sandbox has 128 GiB).
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         # Shuffle/spill scratch on tmpfs: the sandbox's single virtio disk

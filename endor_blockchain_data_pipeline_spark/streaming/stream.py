@@ -80,7 +80,7 @@ def stream_wal_to_table(
             return
         merge_batch(
             table, micro, batch_id, lo - 1, hi, mode=mode, lineage=lineage,
-            decode_fn=decode_changes,
+            decode_fn=decode_changes, est_rows=int(bounds["n"]),
         )
 
     return (

@@ -128,6 +128,46 @@ def test_append_commit_race_retries_and_both_land(spark, tmp_path):
     )
 
 
+def test_append_racing_after_base_snapshot_read_is_not_dropped(spark, tmp_path):
+    """A competitor publishing AFTER a writer loaded the snapshot its next
+    manifest builds on: the writer must re-base, not publish that manifest
+    under a later version (which would drop the competitor's files and
+    batch id while the writer's cache still lists them)."""
+    import sys
+
+    wal = generate_wal(spark, 1200, n_convs=16, max_turns=6, seed=13)
+    ta = ManifestTable(str(tmp_path / "t"), n_buckets=4)
+    tb = ManifestTable(str(tmp_path / "t"), n_buckets=4)
+    ta.commit_staged(_staged_batch(spark, ta, wal, -1, 399, "b0"),
+                     "b0", -1, 399, None, mode="append")
+    sa = _staged_batch(spark, ta, wal, 399, 799, "bA")
+    sb = _staged_batch(spark, tb, wal, 799, 1199, "bB")
+
+    real_manifest = tb.manifest
+    fired = []
+
+    def manifest_then_compete(version=None):
+        m = real_manifest(version)
+        # the commit's own base-snapshot read, not the registry lookups
+        if not fired and sys._getframe(1).f_code.co_name == "_commit_staged_once":
+            fired.append(m["version"])
+            ta.commit_staged(sa, "bA", 399, 799, None, mode="append")
+        return m
+
+    tb.manifest = manifest_then_compete
+    tb.commit_staged(sb, "bB", 799, 1199, None, mode="append")
+    assert fired == [1]
+
+    fresh = ManifestTable(str(tmp_path / "t"))
+    m = fresh.manifest()
+    assert m["version"] == 3
+    a_files = {f for fl in sa["new_buckets"].values() for f in fl}
+    assert a_files <= {f for fl in m["buckets"].values() for f in fl}
+    assert {"b0", "bA", "bB"} <= fresh.committed_batches()
+    assert tb.committed_batches() == fresh.committed_batches()
+    assert_df_equal(fresh.read(spark), brute_force_state(decode_changes(wal)))
+
+
 def test_replace_commit_race_is_terminal(spark, tmp_path):
     """Replace-mode commits do NOT commute — a version race must error."""
     wal = generate_wal(spark, 600, n_convs=8, max_turns=4, seed=5)
@@ -281,8 +321,8 @@ def test_compact_buckets_helper_survives_concurrent_append(spark, tmp_path):
     tb = ManifestTable(str(tmp_path / "t"), n_buckets=4)
     real_stage = t.stage
 
-    def stage_then_race(df, batch_id):
-        staged = real_stage(df, batch_id)
+    def stage_then_race(df, batch_id, **kw):
+        staged = real_stage(df, batch_id, **kw)
         if batch_id == "compact-1":  # append lands inside the race window
             tb.commit_staged(_staged_batch(spark, tb, wal, 799, 1199, "b2"),
                              "b2", 799, 1199, None, mode="append")
