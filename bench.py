@@ -61,9 +61,6 @@ REPS = int(os.environ.get("BENCH_REPS", "2"))
 WORK_ROOT = os.environ.get(
     "BENCH_WORK_ROOT", "/dev/shm" if os.path.isdir("/dev/shm") else None
 )
-# 'mor' (merge-on-read, the 10^10-scale path: apply cost O(changes)) is the
-# headline mode; a CoW run is reported alongside for comparison.
-MODE = os.environ.get("BENCH_MODE", "mor")
 
 HEADLINE = [
     "lww_merge_state",
@@ -284,7 +281,7 @@ def run_cdc_at(
     wal = spark.read.parquet(wal_path)
 
     def make_job(table):
-        job = CDCJob(spark, table, wal, write_mode=MODE, compact_threshold=8, lineage=True)
+        job = CDCJob(spark, table, wal, compact_threshold=8, lineage=True)
         if fixed_width:
             job.decode = _decode_fixed
         return job
@@ -329,30 +326,6 @@ def run_cdc_at(
     return N_EVENTS / dt, sample
 
 
-def run_cow_reference(workdir: str, wal_path: str) -> float:
-    """One copy-on-write run at N_BIG on a quarter of the stream — the
-    comparison number for the MoR-vs-CoW tradeoff table."""
-    from endor_blockchain_data_pipeline_spark.job import CDCJob
-    from endor_blockchain_data_pipeline_spark.session import get_spark, stop_spark
-    from endor_blockchain_data_pipeline_spark.sources.lake import ManifestTable
-
-    spark = get_spark(f"bench-cow-{N_BIG}", master=f"local[{N_BIG}]", shuffle_partitions=N_BIG)
-    wal = spark.read.parquet(wal_path)
-    n = N_EVENTS // 4
-    wt = ManifestTable(os.path.join(workdir, "cow-warm"), n_buckets=64)
-    CDCJob(spark, wt, wal, write_mode="cow").run_batch(-1, min(n // 4, 500_000))
-    best = None
-    for rep in range(REPS):
-        table = ManifestTable(os.path.join(workdir, f"cow-{rep}"), n_buckets=64)
-        job = CDCJob(spark, table, wal, write_mode="cow")
-        t0 = time.time()
-        job.run_to_watermark(batch_size=(n + BATCHES - 1) // BATCHES, limit_batches=BATCHES)
-        dt = time.time() - t0
-        best = dt if best is None else min(best, dt)
-    stop_spark()
-    return n / best
-
-
 def main() -> None:
     t_all = time.time()
     # BENCH_SKIP_QUERIES=1: CDC-phase-only iteration (methodology tuning);
@@ -378,7 +351,6 @@ def main() -> None:
         if os.environ.get("BENCH_FIXED_WIDTH", "1") == "1":
             for c in levels:
                 thr_fx[c], fps_fx[c] = run_cdc_at(c, workdir, wal_path, fixed_width=True)
-        thr_cow = run_cow_reference(workdir, wal_path)
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 
@@ -391,9 +363,7 @@ def main() -> None:
     cdc = {
         "events": N_EVENTS,
         "batches": BATCHES,
-        "mode": MODE,
         **{f"events_per_sec_local{c}": round(thr[c]) for c in levels},
-        f"cow_events_per_sec_local{N_BIG}": round(thr_cow),
         "scaling_efficiency": round(efficiency, 3),
         "scaling_curve": curve,
         "replay_equal": replay_equal,
@@ -435,7 +405,6 @@ def write_bench_md(result: dict) -> None:
     top = max(levels)
     xl = cdc[f"events_per_sec_local{top}"]
     est_days = 1e10 / xl / 86400
-    cow = cdc[f'cow_events_per_sec_local{N_BIG}']
     level_rows = "\n".join(
         f"| local[{c}] {'(N)' if c == N_SMALL else '(4N)' if c == N_BIG else ''} "
         f"| {cdc[f'events_per_sec_local{c}']:,} |"
@@ -480,9 +449,9 @@ low-variance basis for the efficiency criterion.
 Deterministic synthetic transcript WAL, {cdc['events']:,} events applied in
 {cdc['batches']} watermark-bounded batches (narrow LWW winner selection ->
 winner-only decode+normalize -> key-bucketed MERGE -> atomic manifest commit,
-lineage on), identical input at {len(levels)} parallelism levels, write mode
-= **{cdc['mode']}** (merge-on-read: apply cost O(changes), generations
-bounded by compaction threshold 8):
+lineage on), identical input at {len(levels)} parallelism levels, merge-on-read
+appends (apply cost O(changes), generations bounded by compaction
+threshold 8):
 
 | parallelism | events/sec |
 |---|---|
@@ -499,9 +468,6 @@ bounded by compaction threshold 8):
   cluster brings its own bandwidth, so this is a sandbox artifact).
 - **final-state replay equality across ALL levels:** {cdc['replay_equal']}
   (count + order-insensitive xxhash64 fingerprint of every row incl. columns)
-- copy-on-write comparison at local[{N_BIG}]: {cow:,} events/sec (CoW rewrites
-  affected-bucket state every batch; MoR defers the fold to read/compaction —
-  the standard lakehouse tradeoff; both modes replay-equal by test)
 - best-of-{REPS} repetitions per level; shuffle scratch AND bench tables on
   tmpfs (the sandbox's single virtio disk adds ±15% noise / multi-second
   stalls under concurrent parquet writers — production executors bring

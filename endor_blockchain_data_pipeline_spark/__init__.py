@@ -12,9 +12,10 @@ conversation-transcript mutations:
   ``pipeline/src/test/resources/com/endor/blockchain/ethereum/db/001_init.sql``)
 - high-watermark ranged scans (``BlockSummaryPipeline.scala:61-84``)
 - vectorized change-record decode (``BlockSummaryPipeline.scala:90-94`` done
-  as JVM ``from_json`` / Arrow ``pandas_udf`` instead of per-row objects)
-- LWW key-partitioned MERGE into a manifest-based bucketed Parquet lake
-  (replaces delete-inbox-then-append, ``FileSystemDatasetStore.scala:12-28``)
+  as JVM ``from_json`` instead of per-row objects)
+- LWW key-partitioned merge-on-read append into a manifest-based bucketed
+  Parquet lake, compacted per bucket (replaces delete-inbox-then-append,
+  ``FileSystemDatasetStore.scala:12-28``)
 - exactly-once apply via atomic per-batch commit manifests + checkpointed
   offsets; additive schema evolution; per-partition lineage metrics.
 

@@ -6,28 +6,21 @@ Reference parity:
   ``blocksummaries/BlockSummary.scala:72-146``). Here the payload is an
   opaque UTF-8 JSON blob and decode is fully declarative:
   ``decode(binary) -> from_json(schema)`` — JVM-side, whole-stage-codegen,
-  zero Python. An Arrow ``pandas_udf`` decoder is provided as the escape
-  hatch for payload formats ``from_json`` can't express (the reference's
-  RLP-block case); tests assert both paths agree.
+  zero Python. Every feed (parquet, JSON, binary block files, JDBC) hands
+  the decoder a UTF-8 JSON payload, so this one decoder serves them all.
 - text normalization: analog of ``EthereumTokensOps.normalizeName/trimName``
-  (``tokens/EthereumTokensOps.scala:12-19``), done twice: as a pure column
-  expression (preferred — codegen'd) and as a vectorized ``pandas_udf``
-  (Series.str ops, Arrow-batched; never per-row Python).
+  (``tokens/EthereumTokensOps.scala:12-19``) as a pure column expression
+  (codegen'd).
 
-Scale: the column-expression paths stay inside whole-stage codegen — decode
-of a 10^10-event stream is a map-only stage. The pandas_udf path pays one
-Arrow round-trip per batch and is only for non-JSON payload encodings.
+Scale: decode stays inside whole-stage codegen — decode of a
+10^10-event stream is a map-only stage with no Arrow round-trip.
 """
 
 from __future__ import annotations
 
-import json
-
-import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import Column, DataFrame
-from pyspark.sql.functions import pandas_udf
 
 # After-image schema carried inside the WAL payload blob. ``tool`` is the
 # additive-evolution column: absent in early payloads -> decoded as null.
@@ -40,21 +33,13 @@ PAYLOAD_SCHEMA = T.StructType(
     ]
 )
 
-# Parse-time schema: all strings. Parsing timestamps INSIDE from_json is ~6x
-# slower than parsing strings and casting the one needed field afterwards
-# (measured 5.2s vs 0.7s on 2M rows/local[32]); individual field selection
-# also lets Catalyst's OptimizeJsonExprs prune the parse.
-_PAYLOAD_SCHEMA_RAW = T.StructType(
-    [T.StructField(f.name, T.StringType()) for f in PAYLOAD_SCHEMA.fields]
-)
-
 
 def decode_changes(
     wal: DataFrame,
     payload_schema: T.StructType = PAYLOAD_SCHEMA,
     normalize: bool = True,
 ) -> DataFrame:
-    """WAL batch -> decoded + normalized change rows (JVM path, preferred).
+    """WAL batch -> decoded + normalized change rows.
 
     Output: (lsn, op, conv_id, turn_idx, role, text, tool, ts, _mts) where
     ``ts`` is the turn's event time from the payload and ``_mts`` the
@@ -63,6 +48,10 @@ def decode_changes(
     applies the transcript text normalization inline (decode and normalize
     fuse into ONE codegen'd map stage — no extra pass).
     """
+    # Parse-time schema: all strings. Parsing timestamps INSIDE from_json is
+    # ~6x slower than parsing strings and casting the one needed field
+    # afterwards (measured 5.2s vs 0.7s on 2M rows/local[32]); individual
+    # field selection also lets Catalyst's OptimizeJsonExprs prune the parse.
     raw_schema = T.StructType(
         [T.StructField(f.name, T.StringType()) for f in payload_schema.fields]
     )
@@ -86,58 +75,11 @@ def decode_changes(
     )
 
 
-@pandas_udf(PAYLOAD_SCHEMA)
-def decode_payload_arrow(payload: pd.Series) -> pd.DataFrame:
-    """Arrow-batched payload decoder (escape hatch for opaque encodings).
-
-    Analog of the reference's executor-side blob decode
-    (``BlockSummary.scala:72-146``) but batch-at-a-time over Arrow buffers
-    instead of one JVM object per row. Used only when the payload isn't
-    JSON-expressible; `decode_changes` (from_json) is the hot path.
-    """
-
-    def _parse(b: bytes | None) -> dict:
-        if b is None:
-            return {"role": None, "text": None, "tool": None, "ts": None}
-        d = json.loads(bytes(b).decode("utf-8"))
-        return {
-            "role": d.get("role"),
-            "text": d.get("text"),
-            "tool": d.get("tool"),
-            "ts": d.get("ts"),
-        }
-
-    rows = payload.map(_parse)
-    out = pd.DataFrame(list(rows), columns=["role", "text", "tool", "ts"])
-    out["ts"] = pd.to_datetime(out["ts"], errors="coerce")
-    return out
-
-
-def decode_changes_arrow(wal: DataFrame, normalize: bool = True) -> DataFrame:
-    """Same contract as ``decode_changes`` via the Arrow pandas_udf decoder
-    (+ the vectorized Series.str normalizer — the all-Arrow pipeline)."""
-    parsed = wal.withColumn("_p", decode_payload_arrow(F.col("payload")))
-    text = F.col("_p.text")
-    if normalize:
-        text = normalize_text_arrow(text)
-    return parsed.select(
-        "lsn",
-        "op",
-        "conv_id",
-        "turn_idx",
-        F.col("_p.role").alias("role"),
-        text.alias("text"),
-        F.col("_p.tool").alias("tool"),
-        F.col("_p.ts").alias("ts"),
-        F.col("ts").alias("_mts"),
-    )
-
-
 # ---------------- text normalization ----------------
 
 
 def normalize_text_expr(col: Column | str) -> Column:
-    """Pure-column text normalization (whole-stage-codegen'd, preferred).
+    """Pure-column text normalization (whole-stage-codegen'd).
 
     lowercase, strip unicode ellipsis, collapse whitespace, trim — the
     transcript analog of ``normalizeName`` (``EthereumTokensOps.scala:12-16``:
@@ -148,15 +90,6 @@ def normalize_text_expr(col: Column | str) -> Column:
     c = F.regexp_replace(c, "…", " ")
     c = F.regexp_replace(c, r"\s+", " ")
     return F.trim(c)
-
-
-@pandas_udf(T.StringType())
-def normalize_text_arrow(s: pd.Series) -> pd.Series:
-    """Vectorized (Series.str) normalization — parity twin of the expr path."""
-    out = s.str.lower()
-    out = out.str.replace("…", " ", regex=False)
-    out = out.str.replace(r"\s+", " ", regex=True)
-    return out.str.strip()
 
 
 def trim_name_expr(col: Column | str, max_len: int = 16, keep: int = 13) -> Column:

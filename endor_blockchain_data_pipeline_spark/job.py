@@ -1,12 +1,16 @@
-"""CDC apply job: watermark -> ranged scan -> decode -> MERGE -> lineage.
+"""CDC apply job: watermark -> ranged scan -> reduce -> decode -> MoR append.
 
 The driver loop analog of ``SparkApplication.runDriver`` +
 ``BlockSummaryPipeline.run`` (``infra/spark/SparkApplication.scala:49-88``,
-``blocksummaries/BlockSummaryPipeline.scala:55-135``): each ``run_batch`` is
-one micro-batch; ``run_to_watermark`` tails the feed until caught up.
-Exactly-once: a batch id derives from its (lo, hi] LSN range; committed ids
-are skipped on replay (the reference's delete-inbox + `_SUCCESS` dance,
-strengthened to atomic manifest commits).
+``blocksummaries/BlockSummaryPipeline.scala:55-135``). One catch-up loop
+(``CDCJob._apply``) runs every batch: narrow LWW reduce -> winner decode ->
+merge-on-read stage -> ordered append commit -> checkpoint -> compaction of
+the buckets that reached the generation threshold. ``run_batch`` is that
+loop over one (lo, hi] range; ``run_to_watermark`` tails the feed until
+caught up, staging two batches at a time. Exactly-once: a batch id derives
+from its (lo, hi] LSN range; committed ids are skipped on replay (the
+reference's delete-inbox + `_SUCCESS` dance, strengthened to atomic manifest
+commits).
 
 Run under ``spark-submit --py-files endor_blockchain_data_pipeline_spark.zip
 -m endor_blockchain_data_pipeline_spark.job`` on a real cluster; the CLI at
@@ -15,20 +19,36 @@ the bottom drives the same loop locally.
 
 from __future__ import annotations
 
+import concurrent.futures as cf
+import contextlib
 import time
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from endor_blockchain_data_pipeline_spark.functions.decode import (
-    decode_changes,
-    decode_changes_arrow,
-)
+# stage_batch_mor and compact_buckets are looked up on the module at call
+# time, so wrappers installed there (e.g. perfbench's tracer) see every call
+import endor_blockchain_data_pipeline_spark.operators.merge as merge_mod
+from endor_blockchain_data_pipeline_spark.functions.decode import decode_changes
 from endor_blockchain_data_pipeline_spark.lineage import LineageLog
 from endor_blockchain_data_pipeline_spark.operators.merge import lww_reduce, merge_batch
 from endor_blockchain_data_pipeline_spark.sources.checkpoint import Checkpoint
 from endor_blockchain_data_pipeline_spark.sources.lake import ManifestTable
 from endor_blockchain_data_pipeline_spark.sources.wal import ranged_scan, source_max
+
+
+def _lsn_ranges(
+    wal: DataFrame, lo: int, batch_size: int, limit_batches: int | None
+) -> list[tuple[int, int]]:
+    """(lo, hi] steps of ``batch_size`` from ``lo`` to the feed's max LSN,
+    at most ``limit_batches`` of them."""
+    hi_max = source_max(wal)
+    ranges: list[tuple[int, int]] = []
+    while lo < hi_max and (limit_batches is None or len(ranges) < limit_batches):
+        hi = min(lo + batch_size, hi_max)
+        ranges.append((lo, hi))
+        lo = hi
+    return ranges
 
 
 class CDCJob:
@@ -39,22 +59,22 @@ class CDCJob:
         spark: SparkSession,
         table: ManifestTable,
         wal: DataFrame,
-        arrow_decode: bool = False,
-        salted: bool = False,
-        salt_n: int = 16,
         lineage: bool = True,
-        write_mode: str = "cow",
+        write_mode: str = "mor",
         compact_threshold: int = 8,
     ) -> None:
+        if write_mode != "mor":
+            raise ValueError(
+                f"write_mode={write_mode!r}: every CDC batch is a merge-on-read "
+                "append ('mor'); compact_threshold=2 stores what "
+                "copy-on-write would"
+            )
         self.spark = spark
         self.table = table
         self.wal = wal
         self.checkpoint = Checkpoint(table)
-        self.decode = decode_changes_arrow if arrow_decode else decode_changes
-        self.salted = salted
-        self.salt_n = salt_n
+        self.decode = decode_changes
         self.lineage = LineageLog(table.path) if lineage else None
-        self.write_mode = write_mode
         # MoR read amplification bound: a bucket reaching this many file
         # generations is compacted right after the batch that tipped it.
         self.compact_threshold = compact_threshold
@@ -63,131 +83,86 @@ class CDCJob:
     def batch_id_for(lo: int, hi: int) -> str:
         return f"lsn-{lo}-{hi}"
 
+    def _apply(self, ranges: list[tuple[int, int]], depth: int) -> list[dict]:
+        """The catch-up loop: apply each uncommitted (lo, hi] range in order.
+
+        ``depth`` 1 stages inline on the calling thread (``merge_batch``);
+        ``depth`` 2 or more stages up to that many batches concurrently in a
+        pool (MoR stages never read current state) while commits stay
+        strictly ordered on this thread, so the driver-side serial time of
+        batch k+1 (planning, codegen, broadcast build) overlaps batch k's
+        cluster work. Every commit is followed by the same step: the
+        checkpoint, then compaction of the buckets that reached
+        ``compact_threshold`` generations (manifest mutations stay on this
+        thread while later batches keep staging)."""
+        results: list[dict] = []
+        inflight: list[tuple[int, int, str, cf.Future, float]] = []
+
+        def after_commit(batch_id: str, hi: int, manifest: dict) -> None:
+            results.append(manifest)
+            self.checkpoint.record(batch_id, hi)
+            due = self.table.multi_gen_buckets(self.compact_threshold)
+            merge_mod.compact_buckets(
+                self.table, self.spark, f"compact-{batch_id}", due
+            )
+
+        def commit_oldest() -> None:
+            lo, hi, batch_id, fut, t0 = inflight.pop(0)
+            after_commit(batch_id, hi, merge_mod.commit_staged_batch(
+                self.table, fut.result(), batch_id, lo, hi,
+                lineage=self.lineage, t_start=t0,
+            ))
+
+        with (
+            cf.ThreadPoolExecutor(max_workers=depth) if depth > 1
+            else contextlib.nullcontext()
+        ) as pool:
+            for lo, hi in ranges:
+                batch_id = self.batch_id_for(lo, hi)
+                if self.checkpoint.is_committed(batch_id):
+                    continue
+                raw = ranged_scan(self.wal, lo, hi)
+                # dense-feed row bound: the LSN range width caps the batch's
+                # rows, so the reduce and the stage pick their shape safely
+                if pool is None:
+                    after_commit(batch_id, hi, merge_batch(
+                        self.table, raw, batch_id, lo, hi, lineage=self.lineage,
+                        decode_fn=self.decode, est_rows=hi - lo,
+                    ))
+                    continue
+                fut = pool.submit(
+                    merge_mod.stage_batch_mor, self.table, raw, batch_id,
+                    decode_fn=self.decode, est_rows=hi - lo,
+                )
+                inflight.append((lo, hi, batch_id, fut, time.time()))
+                # commit in order whatever must land before more than
+                # ``depth`` stages may run
+                while sum(not f.done() for _, _, _, f, _ in inflight) >= depth:
+                    commit_oldest()
+            while inflight:
+                commit_oldest()
+        return results
+
     def run_batch(self, lo: int, hi: int) -> dict | None:
         """Apply the (lo, hi] WAL range. Returns the manifest, or None if the
         batch was already committed (idempotent replay skip)."""
-        batch_id = self.batch_id_for(lo, hi)
-        if self.checkpoint.is_committed(batch_id):
-            return None
-        raw = ranged_scan(self.wal, lo, hi)
-        manifest = merge_batch(
-            self.table, raw, batch_id, lo, hi,
-            salted=self.salted, salt_n=self.salt_n, lineage=self.lineage,
-            mode=self.write_mode, decode_fn=self.decode,
-            # dense-feed row bound: the LSN range width caps the winner-set
-            # size, so the reduce can pick broadcast vs window safely.
-            est_rows=hi - lo,
-        )
-        if self.write_mode == "mor":
-            from endor_blockchain_data_pipeline_spark.operators.merge import (
-                compact_buckets,
-            )
-
-            due = self.table.multi_gen_buckets(self.compact_threshold)
-            compact_buckets(self.table, self.spark, f"compact-{batch_id}", due)
-        self.checkpoint.record(batch_id, hi)
-        return manifest
+        applied = self._apply([(lo, hi)], depth=1)
+        return applied[0] if applied else None
 
     def run_to_watermark(
-        self,
-        batch_size: int,
-        limit_batches: int | None = None,
-        pipeline: int | None = None,
+        self, batch_size: int, limit_batches: int | None = None
     ) -> list[dict]:
-        """Catch up: sink watermark -> source max in ``batch_size`` steps.
+        """Catch up: sink watermark -> source max in ``batch_size`` steps,
+        two batches staging at a time.
 
         Resume-from-any-checkpoint falls out: the sink watermark IS the
         latest manifest's lsn_hi, so a restarted job continues exactly where
         the last atomic commit left off.
-
-        ``pipeline``: in MoR mode, stage up to this many batches concurrently
-        (their data writes are independent) while commits stay strictly
-        ordered — driver-side serial time (planning, codegen, broadcast
-        build, commit bookkeeping) of batch k+1 overlaps batch k's cluster
-        work. Defaults to 2 for MoR, 1 (serial) for CoW — CoW batch k+1 must
-        read the state k wrote, so it cannot pipeline.
         """
-        if pipeline is None:
-            pipeline = 2 if self.write_mode == "mor" else 1
-        lo = self.checkpoint.last_lsn()
-        hi_max = source_max(self.wal)
-        ranges: list[tuple[int, int]] = []
-        while lo < hi_max:
-            hi = min(lo + batch_size, hi_max)
-            ranges.append((lo, hi))
-            lo = hi
-            if limit_batches is not None and len(ranges) >= limit_batches:
-                break
-
-        if pipeline <= 1 or self.write_mode != "mor" or len(ranges) <= 1:
-            results = []
-            for lo, hi in ranges:
-                m = self.run_batch(lo, hi)
-                if m is not None:
-                    results.append(m)
-            return results
-        return self._run_pipelined(ranges, pipeline)
-
-    def _run_pipelined(self, ranges: list[tuple[int, int]], depth: int) -> list[dict]:
-        """MoR pipelining: concurrent staging, ordered commits."""
-        import concurrent.futures as cf
-
-        from endor_blockchain_data_pipeline_spark.operators.merge import (
-            commit_staged_batch,
-            compact_buckets,
-            stage_batch_mor,
+        ranges = _lsn_ranges(
+            self.wal, self.checkpoint.last_lsn(), batch_size, limit_batches
         )
-
-        results: list[dict] = []
-        with cf.ThreadPoolExecutor(max_workers=depth) as pool:
-            futures: list[tuple[int, int, str, cf.Future | None]] = []
-            for lo, hi in ranges:
-                batch_id = self.batch_id_for(lo, hi)
-                if self.checkpoint.is_committed(batch_id):
-                    futures.append((lo, hi, batch_id, None, None))
-                    continue
-                raw = ranged_scan(self.wal, lo, hi)
-                fut = pool.submit(
-                    stage_batch_mor, self.table, raw, batch_id,
-                    salted=self.salted, salt_n=self.salt_n, decode_fn=self.decode,
-                    est_rows=hi - lo,
-                )
-                futures.append((lo, hi, batch_id, fut, time.time()))
-                # Ordered commit of everything that must land before we are
-                # allowed to run more than `depth` stages ahead.
-                while len([f for _, _, _, f, _ in futures if f is not None and not f.done()]) >= depth:
-                    self._drain_one(futures, results)
-            while futures:
-                self._drain_one(futures, results)
-        # compaction after the pipeline drains (touches committed state)
-        due = self.table.multi_gen_buckets(self.compact_threshold)
-        compact_buckets(self.table, self.spark, f"compact-{ranges[-1][1]}", due)
-        return results
-
-    def _drain_one(self, futures: list, results: list) -> None:
-        from endor_blockchain_data_pipeline_spark.operators.merge import (
-            commit_staged_batch,
-        )
-
-        lo, hi, batch_id, fut, t_sub = futures.pop(0)
-        if fut is None:
-            return
-        staged = fut.result()
-        m = commit_staged_batch(
-            self.table, staged, batch_id, lo, hi,
-            mode="mor", lineage=self.lineage, t_start=t_sub,
-        )
-        self.checkpoint.record(batch_id, hi)
-        results.append(m)
-        # Compaction runs on the commit thread (manifest mutations stay
-        # serialized) while later batches keep staging in the pool.
-        due = self.table.multi_gen_buckets(self.compact_threshold)
-        if due:
-            from endor_blockchain_data_pipeline_spark.operators.merge import (
-                compact_buckets,
-            )
-
-            compact_buckets(self.table, self.spark, f"compact-{batch_id}", due)
+        return self._apply(ranges, depth=2)
 
     def read_state(self) -> DataFrame:
         """Current logical table state (tombstones dropped, internals hidden)."""
@@ -204,30 +179,28 @@ class CDCJob:
         conversations into the :class:`LiveCuration` state — O(changes) for
         BOTH halves, per batch.
 
-        Resume point = min(apply watermark, curation watermark): a crash
-        after the table commit but before the curation refresh re-enters
-        the batch, the table apply replay-skips, and the refresh completes
-        (each is idempotent per batch id). The changed-conv set is one
-        decode map pass over the batch's WAL slice — the merge's own
+        Ranges start at min(apply watermark, curation watermark). Only the
+        part above the apply watermark is applied, (max(lo, watermark), hi],
+        so curation attached to an already-ingested table (or resuming after
+        a crash between the table commit and the refresh) refreshes over
+        (lo, hi] without re-appending committed rows. The changed-conv set
+        is one decode map pass over the range's WAL slice — the merge's own
         decode is winner-scoped, so it cannot be reused for this.
         """
-        lo = min(self.checkpoint.last_lsn(), curation.verdicts.watermark())
-        hi_max = source_max(self.wal)
+        applied = self.checkpoint.last_lsn()
+        start = min(applied, curation.verdicts.watermark())
         results = []
-        while lo < hi_max:
-            hi = min(lo + batch_size, hi_max)
-            m = self.run_batch(lo, hi)
-            if m is not None:
-                results.append(m)
+        for lo, hi in _lsn_ranges(self.wal, start, batch_size, limit_batches):
+            if hi > applied:
+                m = self.run_batch(max(lo, applied), hi)
+                if m is not None:
+                    results.append(m)
             changed = self.decode(ranged_scan(self.wal, lo, hi)).select(
                 "conv_id"
             )
             curation.refresh(
                 changed, f"cur-{self.batch_id_for(lo, hi)}", lsn_hi=hi
             )
-            lo = hi
-            if limit_batches is not None and len(results) >= limit_batches:
-                break
         return results
 
 
@@ -247,22 +220,14 @@ def run_fanout_to_watermark(
     missing sinks (their batch registries skip the done ones)."""
     from endor_blockchain_data_pipeline_spark.operators.fanout import fanout_batch
 
-    lo = min(t.watermark() for t in (state_table, tool_table, stats_table))
-    hi_max = source_max(wal)
-    results = []
-    while lo < hi_max:
-        hi = min(lo + batch_size, hi_max)
-        raw = ranged_scan(wal, lo, hi)
-        results.append(
-            fanout_batch(
-                raw, CDCJob.batch_id_for(lo, hi), lo, hi,
-                state_table, tool_table, stats_table, est_rows=hi - lo,
-            )
+    lo0 = min(t.watermark() for t in (state_table, tool_table, stats_table))
+    return [
+        fanout_batch(
+            ranged_scan(wal, lo, hi), CDCJob.batch_id_for(lo, hi), lo, hi,
+            state_table, tool_table, stats_table, est_rows=hi - lo,
         )
-        lo = hi
-        if limit_batches is not None and len(results) >= limit_batches:
-            break
-    return results
+        for lo, hi in _lsn_ranges(wal, lo0, batch_size, limit_batches)
+    ]
 
 
 def brute_force_state(decoded_wal: DataFrame) -> DataFrame:
@@ -296,8 +261,6 @@ if __name__ == "__main__":
         "explicit conflicting value is an error — bucket routing is part of "
         "the table, not a per-run preference",
     )
-    ap.add_argument("--salted", action="store_true")
-    ap.add_argument("--mode", choices=["cow", "mor"], default="mor")
     ap.add_argument(
         "--fanout",
         action="store_true",
@@ -582,10 +545,7 @@ if __name__ == "__main__":
             f"{dt:.1f}s = {n/max(dt,1e-9):,.0f} events/sec"
         )
         raise SystemExit(0)
-    job = CDCJob(
-        spark, table, wal, salted=args.salted,
-        write_mode=args.mode, compact_threshold=args.compact_threshold,
-    )
+    job = CDCJob(spark, table, wal, compact_threshold=args.compact_threshold)
     lo0 = job.checkpoint.last_lsn()
     t0 = time.time()
     if args.curate_live:

@@ -32,6 +32,7 @@ import pyspark.sql.functions as F
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
+from endor_blockchain_data_pipeline_spark.functions.decode import decode_changes
 from endor_blockchain_data_pipeline_spark.operators.merge import (
     changes_to_state,
     commit_staged_batch,
@@ -84,9 +85,6 @@ def fanout_batch(
     state_table: ManifestTable,
     tool_table: ManifestTable,
     stats_table: ManifestTable,
-    decode_fn=None,
-    salted: bool = False,
-    salt_n: int = 16,
     lineage=None,
     est_rows: int | None = None,
 ) -> dict:
@@ -97,8 +95,6 @@ def fanout_batch(
     ``est_rows`` bounds the batch's rows, so it bounds every sink's rows
     too (each is a filter or per-conv aggregate of the winners).
     """
-    from endor_blockchain_data_pipeline_spark.functions.decode import decode_changes
-
     pending = {
         name: t
         for name, t in (
@@ -110,9 +106,8 @@ def fanout_batch(
     if not pending:
         return results
 
-    decode = decode_fn or decode_changes
-    winners = lww_winner_rows(raw, salted=salted, salt_n=salt_n, est_rows=est_rows)
-    decoded = decode(winners).persist(StorageLevel.MEMORY_AND_DISK)
+    winners = lww_winner_rows(raw, est_rows=est_rows)
+    decoded = decode_changes(winners).persist(StorageLevel.MEMORY_AND_DISK)
     try:
         if "state" in pending:
             new_state = changes_to_state(decoded, batch_id).withColumn(
@@ -120,8 +115,7 @@ def fanout_batch(
             )
             staged = state_table.stage(new_state, batch_id, est_rows=est_rows)
             results["state"] = commit_staged_batch(
-                state_table, staged, batch_id, lsn_lo, lsn_hi,
-                mode="mor", lineage=lineage,
+                state_table, staged, batch_id, lsn_lo, lsn_hi, lineage=lineage
             )
         if "tool" in pending:
             tool_state = changes_to_state(tool_calls_view(decoded), batch_id).withColumn(
@@ -129,7 +123,7 @@ def fanout_batch(
             )
             staged = tool_table.stage(tool_state, batch_id, est_rows=est_rows)
             results["tool"] = commit_staged_batch(
-                tool_table, staged, batch_id, lsn_lo, lsn_hi, mode="mor"
+                tool_table, staged, batch_id, lsn_lo, lsn_hi
             )
         if "stats" in pending:
             stats_state = _stats_to_state(
@@ -139,7 +133,7 @@ def fanout_batch(
             )
             staged = stats_table.stage(stats_state, batch_id, est_rows=est_rows)
             results["stats"] = commit_staged_batch(
-                stats_table, staged, batch_id, lsn_lo, lsn_hi, mode="mor"
+                stats_table, staged, batch_id, lsn_lo, lsn_hi
             )
     finally:
         decoded.unpersist()

@@ -665,7 +665,7 @@ class ManifestTable:
     ) -> dict:
         """Atomically commit ``df`` into the table.
 
-        ``mode="replace"`` (copy-on-write / compaction): the new files become
+        ``mode="replace"`` (compaction and other folds): the new files become
         the ONLY content of ``replaced_buckets`` (None = whole table).
         ``mode="append"`` (merge-on-read): the new files are appended as an
         extra *generation* of their buckets; readers LWW-merge generations.

@@ -14,9 +14,10 @@ Two layers of exactly-once compose here:
   if ``foreachBatch`` re-delivers after a crash (foreachBatch is
   at-least-once by contract — our commit makes it exactly-once).
 
-At scale: maxFilesPerTrigger bounds micro-batch size; the merge itself is
-the same bucket-pruned MoR/CoW apply, so stream vs batch is purely a
-scheduling difference (as it should be in a lakehouse engine).
+At scale: maxFilesPerTrigger bounds micro-batch size; the apply itself is
+the batch job's ``merge_batch`` (narrow LWW reduce, winner decode, MoR
+append), so stream vs batch is purely a scheduling difference (as it
+should be in a lakehouse engine).
 """
 
 from __future__ import annotations
@@ -25,7 +26,6 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
-from endor_blockchain_data_pipeline_spark.functions.decode import decode_changes
 from endor_blockchain_data_pipeline_spark.operators.merge import merge_batch
 from endor_blockchain_data_pipeline_spark.sources.lake import ManifestTable
 
@@ -46,7 +46,6 @@ def stream_wal_to_table(
     wal_dir: str,
     table: ManifestTable,
     checkpoint_dir: str,
-    mode: str = "mor",
     max_files_per_trigger: int | None = None,
     lineage=None,
 ):
@@ -79,8 +78,8 @@ def stream_wal_to_table(
         if batch_id in table.committed_batches():
             return
         merge_batch(
-            table, micro, batch_id, lo - 1, hi, mode=mode, lineage=lineage,
-            decode_fn=decode_changes, est_rows=int(bounds["n"]),
+            table, micro, batch_id, lo - 1, hi, lineage=lineage,
+            est_rows=int(bounds["n"]),
         )
 
     return (

@@ -12,15 +12,10 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
-from endor_blockchain_data_pipeline_spark.functions.decode import (
-    decode_changes,
-    decode_changes_arrow,
-)
+from endor_blockchain_data_pipeline_spark.functions.decode import decode_changes
 from endor_blockchain_data_pipeline_spark.job import CDCJob, brute_force_state
-from endor_blockchain_data_pipeline_spark.operators.merge import (
-    lww_reduce,
-    lww_reduce_salted,
-)
+from endor_blockchain_data_pipeline_spark.operators.merge import lww_winner_rows
+from endor_blockchain_data_pipeline_spark.plans.explain import physical_plan
 from endor_blockchain_data_pipeline_spark.sources.lake import ManifestTable
 from endor_blockchain_data_pipeline_spark.sources.wal import generate_wal, source_max
 
@@ -129,24 +124,22 @@ def test_deletes_and_reinserts(spark, tmp_path):
     assert [(r.conv_id, r.turn_idx, r.text) for r in final] == [("cA", 0, "again")]
 
 
-def test_salted_equals_unsalted(spark, wal):
-    """Explicit two-phase salted LWW == single-phase reduction."""
-    decoded = decode_changes(wal)
-    assert_df_equal(lww_reduce(decoded), lww_reduce_salted(decoded, salt_n=8))
-
-
-def test_arrow_decoder_parity(spark, wal):
-    """pandas_udf decoder and from_json decoder produce identical rows."""
-    a = decode_changes(wal.limit(500))
-    b = decode_changes_arrow(wal.limit(500))
-    assert_df_equal(a, b)
-
-
-def test_salted_job_equals_oracle(spark, wal, oracle, tmp_path):
-    """End-to-end with the salted reduction path."""
-    job = _fresh_job(spark, wal, tmp_path, salted=True, salt_n=4)
-    job.run_to_watermark(batch_size=1300)
-    assert_df_equal(job.read_state(), oracle)
+def test_winner_reduce_collapses_hot_keys_map_side(spark, wal):
+    """The narrow reduce is a partial max(lsn) HashAggregate right below its
+    shuffle, so a hot key reaches the Exchange as one row per map task —
+    the hot-key defense that makes a salted reduce unnecessary. A struct or
+    string aggregation buffer would plan a SortAggregate instead."""
+    plan = physical_plan(lww_winner_rows(wal))
+    assert "SortAggregate" not in plan
+    ops = [line.lstrip(" :+-") for line in plan.splitlines()]
+    ex = next(
+        i for i, op in enumerate(ops)
+        if op.startswith("Exchange hashpartitioning(conv_id")
+    )
+    assert ops[ex - 1].startswith("HashAggregate(keys=[conv_id")
+    assert "functions=[max(lsn" in ops[ex - 1]
+    assert ops[ex + 1].startswith("HashAggregate(keys=[conv_id")
+    assert "functions=[partial_max(lsn" in ops[ex + 1]
 
 
 def test_lineage_recorded(spark, wal, tmp_path):
@@ -164,7 +157,9 @@ def test_lineage_recorded(spark, wal, tmp_path):
 
 
 def test_time_travel_and_vacuum(spark, wal, tmp_path):
-    job = _fresh_job(spark, wal, tmp_path)
+    # compacting every touched bucket after each batch gives v1's files a
+    # successor that supersedes them
+    job = _fresh_job(spark, wal, tmp_path, compact_threshold=2)
     job.run_to_watermark(batch_size=2000)
     v1_rows = job.table.read(spark, version=1).count()
     v2_rows = job.table.read(spark).count()
@@ -172,7 +167,7 @@ def test_time_travel_and_vacuum(spark, wal, tmp_path):
     # default grace period protects young (possibly staged) commit dirs:
     assert job.table.vacuum() == 0
     removed = job.table.vacuum(grace_sec=0)
-    assert removed > 0  # v1's rewritten buckets got cleaned
+    assert removed > 0  # v1's compacted buckets got cleaned
     assert job.table.read(spark).count() == v2_rows  # latest snapshot intact
 
 
@@ -285,7 +280,7 @@ def test_staged_but_uncommitted_batch_invisible_and_replay_safe(spark, tmp_path)
     s1 = changes_to_state(d1, "b1").withColumn(
         "_bucket", bucket_expr(t.bucket_key, t.n_buckets)
     )
-    commit_staged_batch(t, t.stage(s1, "b1"), "b1", -1, 999, mode="mor")
+    commit_staged_batch(t, t.stage(s1, "b1"), "b1", -1, 999)
 
     # batch 2 stages its files... and the writer dies before the commit
     d2 = decode_changes(lww_winner_rows(ranged_scan(wal, 999, 1999)))
@@ -303,7 +298,7 @@ def test_staged_but_uncommitted_batch_invisible_and_replay_safe(spark, tmp_path)
     s2r = changes_to_state(d2, "b2").withColumn(
         "_bucket", bucket_expr(t.bucket_key, t.n_buckets)
     )
-    commit_staged_batch(t, t.stage(s2r, "b2"), "b2", 999, 1999, mode="mor")
+    commit_staged_batch(t, t.stage(s2r, "b2"), "b2", 999, 1999)
     assert t.committed_batches() == {"b1", "b2"}
     # the MoR read LWW-merges generations per key: every key's winner must
     # now come from batch 2 (its lsns are strictly higher), with no orphan

@@ -71,7 +71,7 @@ def test_cli_compact_and_vacuum_e2e(spark, tmp_path):
         )
 
     run("--events", "20000", "--convs", "64", "--batch-size", "4000",
-        "--buckets", "4", "--mode", "mor", "--compact-threshold", "1000")
+        "--buckets", "4", "--compact-threshold", "1000")
     t = ManifestTable(table)
     assert len(t.multi_gen_buckets(2)) > 0  # really multi-generation
     before_rows = sorted(tuple(r) for r in t.read(spark).collect())

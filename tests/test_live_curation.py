@@ -288,6 +288,41 @@ def test_cdc_driven_live_curation(spark, tmp_path):
     assert _rows(lc.verdicts_df()) == _rows(one)
 
 
+def test_curation_attached_to_ingested_table_reapplies_nothing(spark, tmp_path):
+    """Attaching curation to a table the CDC job already ingested refreshes
+    over every range from the curation watermark but re-appends none of
+    them: the state still equals the replay oracle (no duplicated rows) and
+    the verdicts equal the one-shot funnel."""
+    from endor_blockchain_data_pipeline_spark.functions.decode import decode_changes
+    from endor_blockchain_data_pipeline_spark.job import CDCJob, brute_force_state
+    from endor_blockchain_data_pipeline_spark.operators.live_curation import (
+        LiveCuration,
+    )
+    from endor_blockchain_data_pipeline_spark.sources.lake import ManifestTable
+    from endor_blockchain_data_pipeline_spark.sources.wal import generate_wal
+
+    from tests.conftest import assert_df_equal
+
+    wal = generate_wal(spark, 3000, n_convs=24, max_turns=6, seed=7)
+    table = ManifestTable(str(tmp_path / "t"), n_buckets=8)
+    job = CDCJob(spark, table, wal)
+    job.run_to_watermark(1000)
+    version = table.current_version()
+
+    lc = LiveCuration(
+        spark, str(tmp_path / "cur"), table, dup_word_max=0.34, **IDX
+    )
+    # ranges (-1, 1499] and (1499, 2999] match no committed batch id
+    assert job.run_with_curation(1500, lc) == []
+    assert table.current_version() == version
+    assert lc.verdicts.watermark() == 2999
+    assert_df_equal(table.read(spark), brute_force_state(decode_changes(wal)))
+    one = _one_shot(
+        spark, table, None, str(tmp_path / "os"), dup_word_max=0.34
+    )
+    assert _rows(lc.verdicts_df()) == _rows(one)
+
+
 def test_string_id_index_pinned(spark, tmp_path):
     from endor_blockchain_data_pipeline_spark.operators.incremental_dedup import (
         DedupIndex,

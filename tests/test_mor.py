@@ -1,5 +1,5 @@
-"""Merge-on-read mode: equivalence with copy-on-write, compaction bounds,
-resume, idempotency."""
+"""Merge-on-read apply: compaction equivalence and bounds, resume,
+idempotency."""
 
 from __future__ import annotations
 
@@ -26,18 +26,23 @@ def oracle(spark, wal):
     return brute_force_state(decode_changes(wal)).cache()
 
 
-def test_mor_equals_oracle_and_cow(spark, wal, oracle, tmp_path):
-    mor_t = ManifestTable(str(tmp_path / "mor"), n_buckets=8)
-    mor = CDCJob(spark, mor_t, wal, write_mode="mor", compact_threshold=100)
-    mor.run_to_watermark(batch_size=500)
-    assert_df_equal(mor.read_state(), oracle)
+def test_compact_every_batch_equals_never_compacting_and_oracle(
+    spark, wal, oracle, tmp_path
+):
+    never_t = ManifestTable(str(tmp_path / "never"), n_buckets=8)
+    never = CDCJob(spark, never_t, wal, compact_threshold=100)
+    never.run_to_watermark(batch_size=500)
+    assert_df_equal(never.read_state(), oracle)
     # no compaction happened: buckets really are multi-generation
-    assert len(mor_t.multi_gen_buckets(2)) > 0
+    assert len(never_t.multi_gen_buckets(2)) > 0
 
-    cow_t = ManifestTable(str(tmp_path / "cow"), n_buckets=8)
-    cow = CDCJob(spark, cow_t, wal, write_mode="cow")
-    cow.run_to_watermark(batch_size=500)
-    assert_df_equal(mor.read_state(), cow.read_state())
+    # threshold 2 folds every touched bucket after each batch — the state
+    # copy-on-write would store
+    every_t = ManifestTable(str(tmp_path / "every"), n_buckets=8)
+    every = CDCJob(spark, every_t, wal, compact_threshold=2)
+    every.run_to_watermark(batch_size=500)
+    assert every_t.multi_gen_buckets(2) == []
+    assert_df_equal(every.read_state(), never.read_state())
 
 
 def test_mor_auto_compaction_bounds_generations(spark, wal, oracle, tmp_path):

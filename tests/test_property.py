@@ -16,10 +16,7 @@ import pyspark.sql.functions as F
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from endor_blockchain_data_pipeline_spark.operators.merge import (
-    lww_reduce,
-    lww_reduce_salted,
-)
+from endor_blockchain_data_pipeline_spark.operators.merge import lww_reduce
 
 BASE = dt.datetime(2024, 1, 1)
 
@@ -91,14 +88,6 @@ def test_lww_reduce_matches_python_oracle(spark, events):
     assert live == expect
     # every key ever touched has exactly one winner row (incl. tombstones)
     assert winners_all == {(f"c{c}", t) for (c, t, _o, _x) in events}
-    # the explicit salted two-phase reduction is equivalent
-    salted = {
-        (r["conv_id"], r["turn_idx"]): (r["text"], r["lsn"])
-        for r in lww_reduce_salted(df, salt_n=4)
-        .where(F.col("op") != "delete")
-        .collect()
-    }
-    assert salted == expect
 
 
 @settings(

@@ -24,7 +24,7 @@ def test_stream_apply_equals_oracle(spark, tmp_path):
     q = stream_wal_to_table(
         spark, wal_dir, table,
         checkpoint_dir=str(tmp_path / "ckpt"),
-        mode="mor", max_files_per_trigger=2,
+        max_files_per_trigger=2,
     )
     q.awaitTermination(120)
 
@@ -34,7 +34,7 @@ def test_stream_apply_equals_oracle(spark, tmp_path):
     # restart the stream over the same checkpoint: no new data, no new commits
     v = table.current_version()
     q2 = stream_wal_to_table(
-        spark, wal_dir, table, checkpoint_dir=str(tmp_path / "ckpt"), mode="mor"
+        spark, wal_dir, table, checkpoint_dir=str(tmp_path / "ckpt")
     )
     q2.awaitTermination(60)
     assert table.current_version() == v
@@ -44,7 +44,7 @@ def test_stream_apply_equals_oracle(spark, tmp_path):
     late = more.where(F.col("lsn") >= n)
     late.write.mode("overwrite").parquet(f"{wal_dir}/batch-{n-1}-{n+599}")
     q3 = stream_wal_to_table(
-        spark, wal_dir, table, checkpoint_dir=str(tmp_path / "ckpt"), mode="mor"
+        spark, wal_dir, table, checkpoint_dir=str(tmp_path / "ckpt")
     )
     q3.awaitTermination(60)
     assert_df_equal(table.read(spark), brute_force_state(decode_changes(more)))
