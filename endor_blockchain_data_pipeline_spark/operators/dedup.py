@@ -336,20 +336,15 @@ def ngram_jaccard(
     )
 
 
-import os
-
 # Below this many distinct candidate pairs, connected components runs as a
 # driver-side union-find on the collected pair list instead of iterative
 # label propagation. The pairs table is the SMALL artifact of the pipeline —
 # LSH bucket caps bound pairs-per-doc, so even a 100-TB corpus yields pairs
 # orders of magnitude smaller than the corpus — and union-find is
 # O(E α(E)) with zero per-iteration job latency, while each propagation
-# iteration costs a full join+agg+checkpoint round trip. Same adaptive
-# discipline as the merge path's broadcast gates. 0 disables (always
-# distributed).
-DUP_CLUSTERS_DRIVER_PAIR_LIMIT = int(
-    os.environ.get("DUP_CLUSTERS_DRIVER_PAIR_LIMIT", "1000000")
-)
+# iteration costs a full join+agg+checkpoint round trip. A caller's
+# driver_pair_limit=0 forces the distributed path.
+DUP_CLUSTERS_DRIVER_PAIR_LIMIT = 1_000_000
 
 
 def _arrow_col(tbl, name):

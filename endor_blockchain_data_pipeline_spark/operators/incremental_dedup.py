@@ -16,8 +16,8 @@ commits, atomic manifests, idempotent replay for free):
   (cluster_id = min doc_id in the component; singletons carry their own
   id).
 
-Both tables stamp ``_lsn`` per BATCH, so every merge over them is the
-per-key window (the lake's unique-lsn broadcast join-back is unsound here).
+Both tables stamp ``_lsn`` per BATCH; the lake's per-key window merge,
+ordered by ``(_lsn desc, _mts desc)``, reads them like any other table.
 
 Per batch, ONE delta fold (``fold(leave, enter, batch_id)``) takes leavers
 and entrants together; an id in both is a text change. ``add_batch`` and
@@ -47,7 +47,7 @@ For pandas entrants the fold hands back the label rows it wrote, so
 ``LiveCuration`` joins those instead of reading ``clusters`` back; only a
 fold replayed after a crash, or the distributed twin, is read back by batch
 id. Every read excludes the batch id, so a replay after a crash between the
-two commits recomputes the identical delta. ``driver_pair_limit`` bounds
+two commits recomputes the identical delta. ``driver_row_limit`` bounds
 each collect of the fold in rows: probe hits, affected-cluster members and
 key-sharing entrant band rows. Past it the same fold runs as pure
 DataFrames (``_fold_distributed``) — nothing corpus-sized reaches the
@@ -109,7 +109,7 @@ class DedupIndex:
         id_col: str = "doc_id",
         text_col: str = "text",
         n_buckets: int = 16,
-        driver_pair_limit: int | None = None,
+        driver_row_limit: int | None = None,
         id_type: str = "long",
         small_commit_rows: int | None = None,
     ) -> None:
@@ -127,10 +127,10 @@ class DedupIndex:
         # the most rows one fold collect may bring to the driver (probe
         # hits, affected-cluster members, key-sharing entrant band rows);
         # past it the fold runs distributed
-        self.driver_pair_limit = (
+        self.driver_row_limit = (
             DUP_CLUSTERS_DRIVER_PAIR_LIMIT
-            if driver_pair_limit is None
-            else driver_pair_limit
+            if driver_row_limit is None
+            else driver_row_limit
         )
         passed = {
             "k_shingle": k_shingle,
@@ -167,10 +167,6 @@ class DedupIndex:
             self.params["id_type"] = id_type
             with open(pfile, "w") as fh:
                 json.dump(self.params, fh)
-        # unique_lsn=False: these tables stamp _lsn per BATCH, so every read
-        # (including compaction's) is forced onto the per-key window merge —
-        # the lsn-equality broadcast join-back is unsound here and the table
-        # itself now refuses it.
         # small_commit_rows: the row bound up to which a commit stages on
         # the driver (None: the lake's DRIVER_STAGE_ROW_LIMIT). A driver fold
         # commits pandas-built frames, whose plans carry their row count;
@@ -181,7 +177,6 @@ class DedupIndex:
             n_buckets=n_buckets,
             key_cols=(id_col, "band_idx"),
             bucket_key=id_col,
-            unique_lsn=False,
             small_commit_rows=small_commit_rows,
         )
         self.clusters = ManifestTable(
@@ -189,7 +184,6 @@ class DedupIndex:
             n_buckets=n_buckets,
             key_cols=(id_col,),
             bucket_key=id_col,
-            unique_lsn=False,
             small_commit_rows=small_commit_rows,
         )
 
@@ -198,10 +192,6 @@ class DedupIndex:
     def _read(self, table: ManifestTable, **kw) -> DataFrame | None:
         if table.manifest() is None:
             return None
-        # _lsn is per-BATCH here (not per-row unique): the tables are opened
-        # with unique_lsn=False, which pins every merge — this read's AND
-        # compaction's — to the per-key window strategy (the CDC broadcast
-        # join-back on lsn equality would be wrong).
         return table.read(self.spark, **kw)
 
     def maintain(
@@ -296,7 +286,7 @@ class DedupIndex:
         a key with another entrant or with a remaining member reach the
         driver, and its label rows are written by a join. The fold runs on
         the driver unless a collect — probe hits, affected-cluster members
-        or key-sharing entrant band rows — exceeds ``driver_pair_limit``
+        or key-sharing entrant band rows — exceeds ``driver_row_limit``
         rows; then the pure-DataFrame twin runs."""
         import numpy as np
         import pandas as pd
@@ -312,7 +302,7 @@ class DedupIndex:
                 "replayed_bands": True,
                 "replayed_clusters": True,
             }, None
-        id_col, limit = self.id_col, self.driver_pair_limit
+        id_col, limit = self.id_col, self.driver_row_limit
         cols = [id_col, "band_idx", "band_key"]
         if isinstance(leave, DataFrame):
             leave = _arrow_col(
@@ -590,7 +580,7 @@ class DedupIndex:
             .distinct()
         )
         labels = dup_clusters(
-            edges, driver_pair_limit=self.driver_pair_limit, assume_distinct=True
+            edges, driver_pair_limit=self.driver_row_limit, assume_distinct=True
         ).select(F.col("node").alias("_node"), F.col("cluster_id").alias("_lab"))
 
         def relabel(df):

@@ -177,13 +177,11 @@ class LiveCuration:
         # its row count; up to small_commit_rows rows (None: the lake's
         # DRIVER_STAGE_ROW_LIMIT) a store stages on the driver (one Arrow
         # collect + local bucket writes instead of a shuffle+write job).
-        # per-BATCH _lsn on all three stores -> window merge only
         self.exact = ManifestTable(
             os.path.join(root, "exact"),
             n_buckets=n_buckets,
             key_cols=("fingerprint", conv_col),
             bucket_key="fingerprint",
-            unique_lsn=False,
             small_commit_rows=small_commit_rows,
         )
         self.verdicts = ManifestTable(
@@ -191,7 +189,6 @@ class LiveCuration:
             n_buckets=n_buckets,
             key_cols=(conv_col,),
             bucket_key=conv_col,
-            unique_lsn=False,
             small_commit_rows=small_commit_rows,
         )
         self.near = DedupIndex(

@@ -53,18 +53,14 @@ class ContinuousAggregate:
         self.dims = tuple(dims)
         self.ts_col = ts_col
         self.value_col = value_col
-        # unique_lsn=False: rows stamp a per-batch sequence; additive reads
-        # use merge_strategy="none" anyway, but a stray default read must
-        # never LWW-broadcast on duplicated lsns.
         # semantics="additive": the table itself knows its rows are partial
-        # aggregates — ANY reader's auto merge becomes "none" (fold, don't
+        # aggregates — ANY reader's default merge is "none" (fold, don't
         # LWW) and the generic LWW compaction paths refuse it outright.
         self.table = ManifestTable(
             path,
             n_buckets=n_buckets,
             key_cols=("bucket_start", *self.dims),
             bucket_key="bucket_start",
-            unique_lsn=False,
             semantics="additive",
         )
 

@@ -290,7 +290,6 @@ class ManifestTable:
         n_buckets: int | None = None,
         key_cols: tuple[str, ...] | None = None,
         bucket_key: str | None = None,
-        unique_lsn: bool | None = None,
         semantics: str | None = None,
         small_commit_rows: int | None = None,
     ) -> None:
@@ -314,19 +313,11 @@ class ManifestTable:
             "n_buckets": n_buckets is not None,
             "key_cols": key_cols is not None,
             "bucket_key": bucket_key is not None,
-            "unique_lsn": unique_lsn is not None,
             "semantics": semantics is not None,
         }
         self.n_buckets = self.DEFAULT_N_BUCKETS if n_buckets is None else int(n_buckets)
         self.key_cols = tuple(key_cols) if key_cols is not None else self.DEFAULT_KEY_COLS
         self.bucket_key = bucket_key if bucket_key is not None else self.DEFAULT_BUCKET_KEY
-        # unique_lsn=False declares that _lsn is NOT globally unique per row
-        # (e.g. per-batch sequence numbers): the generation merge must then
-        # use the per-key window, never the lsn-equality broadcast join-back
-        # (which silently keeps every row sharing a winner's lsn VALUE).
-        # Persisted in the manifest like the rest of the layout — a reader
-        # cannot opt into a merge strategy that is unsound for the table.
-        self.unique_lsn = True if unique_lsn is None else bool(unique_lsn)
         # Merge semantics are part of the TABLE, like the bucket layout:
         # "lww" rows supersede per key (the CDC default); "additive" rows
         # are partial aggregates that FOLD by SUM — an LWW merge (read or
@@ -354,7 +345,6 @@ class ManifestTable:
             "n_buckets": int(m.get("n_buckets", self.n_buckets)),
             "key_cols": tuple(m.get("key_cols", self.key_cols)),
             "bucket_key": m.get("bucket_key", self.bucket_key),
-            "unique_lsn": bool(m.get("unique_lsn", self.unique_lsn)),
             "semantics": m.get("semantics", self.semantics),
         }
         for name, val in stored.items():
@@ -473,11 +463,6 @@ class ManifestTable:
 
     # ---------------- read path ----------------
 
-    # Above this many rows across the selected multi-generation buckets, the
-    # winner-LSN set is too big to broadcast (billions of keys => tens of GB
-    # => executor OOM); the read switches to the per-key window merge.
-    MERGE_BROADCAST_ROW_LIMIT = 4_000_000
-
     def read(
         self,
         spark: SparkSession,
@@ -486,7 +471,7 @@ class ManifestTable:
         version: int | None = None,
         batch_ids: list[str] | None = None,
         exclude_batch_ids: list[str] | None = None,
-        merge_strategy: str = "auto",
+        merge_strategy: str | None = None,
         declared_schema: T.StructType | None = None,
     ) -> DataFrame:
         """Snapshot read of manifested files only, with bucket pruning.
@@ -502,20 +487,23 @@ class ManifestTable:
           schema (``coerce_to_declared`` — e.g. a ``date`` reader over
           ``timestamp`` files truncates instead of erroring). Applied after
           the internal-column drop; user-facing columns only.
-        - ``merge_strategy``: how multi-generation (MoR) buckets LWW-merge.
-          ``"none"`` skips the generation merge entirely and returns EVERY
-          generation's rows — for tables whose rows are additive partial
-          aggregates (continuous rollups) where the caller folds by SUM,
-          not last-writer-wins. Other values:
-          ``"broadcast"`` — narrow max(_lsn) winner set broadcast-joined back
-          (fast, zero sort; ONLY safe while the winner set fits an executor);
-          ``"window"`` — row_number per key over (_lsn desc): one shuffle of
-          the selected buckets, no driver/executor-sized collection, and
-          naturally collapses accidental duplicate (key, _lsn) rows;
-          ``"auto"`` — pick by the manifest's per-bucket row counts, so a
-          full-table read of a billion-key table can never OOM on the
-          broadcast (r1 VERDICT scale-killer #1).
+        - ``merge_strategy``: how multi-generation (MoR) buckets combine.
+          ``"window"`` is the LWW merge: per key, the row first by
+          ``(_lsn desc, _mts desc)`` wins (``row_number``, one shuffle of
+          the selected rows, nothing collected or broadcast). It is correct
+          whether ``_lsn`` is unique per row or stamped per batch, and it
+          collapses duplicate (key, ``_lsn``) rows. ``"none"`` skips the
+          merge and returns EVERY generation's rows — for additive tables
+          (continuous rollups), whose partial aggregates the caller folds
+          by SUM. ``None`` follows the table's semantics: ``"window"`` on
+          LWW tables, ``"none"`` on additive ones, which refuse
+          ``"window"``. Any other value raises ``ValueError``.
         """
+        if merge_strategy not in (None, "window", "none"):
+            raise ValueError(
+                f"unknown merge_strategy {merge_strategy!r}: expected "
+                '"window", "none" or None'
+            )
         m = self.manifest(version)
         if m is None:
             raise FileNotFoundError(f"no committed snapshot at {self.path}")
@@ -523,12 +511,11 @@ class ManifestTable:
         gens = m.get("bucket_gens", {})
         sel = None if buckets is None else {str(int(b)) for b in buckets}
         files: list[str] = []
-        merge_buckets: list[str] = []
+        multi_gen = False
         for b, flist in m["buckets"].items():
             if sel is None or b in sel:
                 files.extend(os.path.join(self.path, f) for f in flist)
-                if gens.get(b, 1) > 1:
-                    merge_buckets.append(b)
+                multi_gen = multi_gen or gens.get(b, 1) > 1
         if not files:
             df = spark.createDataFrame([], schema)
         else:
@@ -539,66 +526,25 @@ class ManifestTable:
             df = df.where(F.col("_batch").isin(batch_ids))
         if exclude_batch_ids is not None:
             df = df.where(~F.col("_batch").isin(exclude_batch_ids))
-        if m.get("semantics", "lww") == "additive" and merge_strategy != "none":
-            if merge_strategy in ("broadcast", "window"):
+        if m.get("semantics", "lww") == "additive":
+            if merge_strategy == "window":
                 raise ValueError(
                     f"table {self.path} is ADDITIVE (partial aggregates): "
                     "an LWW merge would discard partials; read with "
                     'merge_strategy="none" and fold'
                 )
-            merge_strategy = "none"  # auto on additive tables: no merge
-        if merge_buckets and merge_strategy != "none":
-            key_cols = list(m.get("key_cols", self.key_cols))
-            strategy = merge_strategy
-            if not bool(m.get("unique_lsn", True)):
-                # The broadcast merge joins back on lsn VALUE equality,
-                # which is only sound when every row's _lsn is unique; this
-                # table declared per-batch lsns, so broadcast would keep
-                # every same-lsn row. Window is the only correct merge.
-                if strategy == "broadcast":
-                    raise ValueError(
-                        f"table {self.path} has non-unique _lsn "
-                        "(unique_lsn=false); the broadcast merge strategy "
-                        "is unsound for it"
-                    )
-                strategy = "window"
-            if strategy == "auto":
-                n_rows = self._selected_row_estimate(m, sel)
-                strategy = (
-                    "broadcast"
-                    if n_rows is not None and n_rows <= self.MERGE_BROADCAST_ROW_LIMIT
-                    else "window"
-                )
-            if strategy == "broadcast":
-                # Narrow winner selection (fixed-width HashAggregate, payload
-                # pruned from the scan) + join-back on the globally-unique
-                # _lsn. Commit protocol guarantees each (key, _lsn) appears
-                # in at most one generation (running-max watermark + batch
-                # registry), so the join-back is exactly-one-per-key.
-                winners = (
-                    df.select(*key_cols, "_lsn")
-                    .groupBy(*key_cols)
-                    .agg(F.max("_lsn").alias("_win_lsn"))
-                    .select("_win_lsn")
-                )
-                df = df.join(
-                    F.broadcast(winners), df["_lsn"] == winners["_win_lsn"], "inner"
-                ).drop("_win_lsn")
-            else:
-                # Bucket rows shuffle once by key; nothing is collected or
-                # broadcast, so the merge survives any table size. row_number
-                # (not rank) also collapses duplicate (key, _lsn) rows if an
-                # external writer ever violated the at-most-once invariant.
-                from pyspark.sql import Window
+            merge_strategy = "none"
+        if multi_gen and merge_strategy != "none":
+            from pyspark.sql import Window
 
-                w = Window.partitionBy(*key_cols).orderBy(
-                    F.col("_lsn").desc(), F.col("_mts").desc()
-                )
-                df = (
-                    df.withColumn("_rn", F.row_number().over(w))
-                    .where(F.col("_rn") == 1)
-                    .drop("_rn")
-                )
+            w = Window.partitionBy(*m.get("key_cols", self.key_cols)).orderBy(
+                F.col("_lsn").desc(), F.col("_mts").desc()
+            )
+            df = (
+                df.withColumn("_rn", F.row_number().over(w))
+                .where(F.col("_rn") == 1)
+                .drop("_rn")
+            )
         if not with_internal:
             df = df.where(~F.col("_deleted")).drop(*INTERNAL_COLS)
         if declared_schema is not None:
@@ -610,8 +556,8 @@ class ManifestTable:
         """Upper-bound row count of the selected buckets from manifest stats.
 
         Uses the cumulative per-bucket row counts maintained at commit time;
-        None (conservative => window merge) for legacy manifests without
-        stats for every selected bucket.
+        None (unbounded => distributed staging) for legacy manifests without
+        stats for every selected bucket. Compaction bounds its commit with it.
         """
         counts = m.get("bucket_rows", {})
         buckets = m["buckets"].keys() if sel is None else sel
@@ -932,9 +878,9 @@ class ManifestTable:
             schema = merge_schemas(_schema_from_json(prev["schema"]), data_schema)
             buckets = {b: list(fl) for b, fl in prev["buckets"].items()}
             gens = dict(prev.get("bucket_gens", {b: 1 for b in buckets}))
-            # Cumulative per-bucket row counts: drive the read-side merge
-            # strategy (broadcast vs window) without any scan. Legacy buckets
-            # without counts stay absent (conservative window merge).
+            # Cumulative per-bucket row counts: bound a compaction's rows
+            # (``_selected_row_estimate``) without any scan. Legacy buckets
+            # without counts stay absent (unbounded).
             bucket_rows = dict(prev.get("bucket_rows", {}))
             if mode == "append":
                 for b, fl in new_buckets.items():
@@ -945,9 +891,7 @@ class ManifestTable:
                         bucket_rows[b] = new_rows[b]
                     elif b in bucket_rows:
                         bucket_rows[b] += new_rows[b]
-                    # else: legacy bucket without a count — stays absent
-                    # (read falls back to the window merge, never a blind
-                    # broadcast).
+                    # else: legacy bucket without a count — stays absent.
             else:
                 replaced = (
                     set(str(b) for b in replaced_buckets)
@@ -1004,7 +948,7 @@ class ManifestTable:
                     buckets[b] = fl + extra
                     gens[b] = 1 + carried_gens.get(b, 0)
                     if extra and carried_rows.get(b) is None:
-                        bucket_rows.pop(b, None)  # unknown -> window merge
+                        bucket_rows.pop(b, None)  # unknown -> unbounded
                     else:
                         bucket_rows[b] = new_rows[b] + (carried_rows.get(b) or 0)
                 for b, extra in carried_files.items():
@@ -1065,7 +1009,6 @@ class ManifestTable:
             "n_buckets": self.n_buckets,
             "key_cols": list(self.key_cols),
             "bucket_key": self.bucket_key,
-            "unique_lsn": self.unique_lsn,
             "semantics": self.semantics,
             "stats": stats or {},
             "new_bucket_stats": bucket_stats,

@@ -116,7 +116,7 @@ def test_pair_bound_falls_back_to_distributed_fold(spark, tmp_path):
     rows1 = [(1, T1), (2, T2), (3, T3)]
     rows2 = [(10, T1), (11, T1), (12, T2), (13, T4)]
 
-    small = DedupIndex(spark, str(tmp_path / "small"), driver_pair_limit=1)
+    small = DedupIndex(spark, str(tmp_path / "small"), driver_row_limit=1)
     big = DedupIndex(spark, str(tmp_path / "big"))
     for i, rows in enumerate([rows1, rows2]):
         s_small = small.add_batch(_docs(spark, rows), f"b{i}")
@@ -134,12 +134,8 @@ def test_pair_bound_falls_back_to_distributed_fold(spark, tmp_path):
 
 def test_index_maintain_compacts_and_preserves_verdict(spark, tmp_path):
     """Many small batches pile up one generation per batch; maintain() folds
-    them, reclaims files, and the keep-list is unchanged. The index tables
-    declare unique_lsn=False, so every merge (reads AND compaction) is
-    pinned to the window strategy — the broadcast join-back is refused."""
+    them, reclaims files, and the keep-list is unchanged."""
     import os
-
-    from endor_blockchain_data_pipeline_spark.sources.lake import ManifestTable
 
     idx = DedupIndex(spark, str(tmp_path / "idx"))
     texts = [T1, T2, T3, T4]
@@ -168,17 +164,6 @@ def test_index_maintain_compacts_and_preserves_verdict(spark, tmp_path):
     idx.add_batch(_docs(spark, [(100, T1)]), "b5")
     v = {r["doc_id"]: r["cluster_id"] for r in idx.keep_list().collect()}
     assert v[100] == min(i for i, c in v.items() if c == v[100])
-
-    # layout adoption covers unique_lsn too: a bare reopen (no args) adopts
-    # the flag, and a multi-generation read REFUSES the broadcast strategy.
-    # Re-ingesting existing doc ids guarantees a second generation lands in
-    # buckets that already hold their keys.
-    idx.add_batch(_docs(spark, [(0, texts[0]), (1, texts[1]), (2, texts[2])]), "b6")
-    t = ManifestTable(idx.clusters.path)
-    assert t.unique_lsn is False
-    assert len(t.multi_gen_buckets(2)) > 0
-    with pytest.raises(ValueError, match="unsound"):
-        t.read(spark, merge_strategy="broadcast").collect()
 
 
 def test_crash_between_commits_keeps_label_lsns_monotonic(spark, tmp_path):
@@ -389,7 +374,7 @@ def test_remove_distributed_fold_matches_driver(spark, tmp_path):
     a.remove_docs([1, 20], "rm")
     want = sorted(tuple(r) for r in a.keep_list().collect())
 
-    b = DedupIndex(spark, str(tmp_path / "b"), driver_pair_limit=2)
+    b = DedupIndex(spark, str(tmp_path / "b"), driver_row_limit=2)
     b.add_batch(_docs(spark, rows), "b1")
     s = b.remove_docs([1, 20], "rm")
     assert s["fold"] == "distributed-label-propagation"

@@ -73,6 +73,106 @@ def test_replay_equality_across_layoutless_reopen(spark, tmp_path):
     assert st.count() == st.select("conv_id", "turn_idx").distinct().count()
 
 
+def _hand_written_store(path, unique_lsn=None, semantics="lww"):
+    """A store in one bucket and three generations under a hand-written
+    manifest, as an older writer left it: ``unique_lsn`` (when given) is
+    the manifest key that writer persisted. ``_lsn`` is stamped per batch,
+    and batch b3 re-uses b2's ``_lsn`` with a later ``_mts``, so several
+    rows share one ``_lsn`` across generations. Returns the newest
+    generation's label per live key."""
+    import datetime as dt
+    import json
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pyspark.sql.types as T
+
+    gens = {  # batch: rows of (doc_id, label, _lsn, _mts second, _deleted)
+        "b1": [(1, 10, 1, 1, False), (2, 20, 1, 1, False),
+               (3, 30, 1, 1, False), (4, 40, 1, 1, False)],
+        "b2": [(1, 11, 2, 2, False), (2, 21, 2, 2, False)],
+        "b3": [(1, 12, 2, 3, False), (3, 31, 2, 3, True)],
+    }
+    os.makedirs(os.path.join(path, "data"))
+    os.makedirs(os.path.join(path, "_manifests"))
+    files = []
+    for batch, rows in gens.items():
+        doc, label, lsn, sec, deleted = zip(*rows)
+        files.append(f"data/{batch}.parquet")
+        pq.write_table(
+            pa.table({
+                "doc_id": pa.array(doc, pa.int64()),
+                "label": pa.array(label, pa.int64()),
+                "_lsn": pa.array(lsn, pa.int64()),
+                "_mts": pa.array(
+                    [dt.datetime(2024, 1, 1, 0, 0, x, tzinfo=dt.timezone.utc) for x in sec],
+                    pa.timestamp("us", tz="UTC"),
+                ),
+                "_deleted": pa.array(deleted),
+                "_batch": pa.array([batch] * len(rows)),
+            }),
+            os.path.join(path, files[-1]),
+        )
+    schema = T.StructType([
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("label", T.LongType()),
+        T.StructField("_lsn", T.LongType()),
+        T.StructField("_mts", T.TimestampType()),
+        T.StructField("_deleted", T.BooleanType()),
+        T.StructField("_batch", T.StringType()),
+    ])
+    manifest = {
+        "version": 3, "batch_id": "b3", "lsn_lo": 2, "lsn_hi": 2, "watermark": 2,
+        "registry_file": None, "registry_delta": list(gens),
+        "schema": schema.json(),
+        "buckets": {"0": files}, "bucket_gens": {"0": 3}, "bucket_rows": {"0": 8},
+        "n_buckets": 1, "key_cols": ["doc_id"], "bucket_key": "doc_id",
+        "semantics": semantics, "stats": {}, "new_bucket_stats": {},
+        "total_commits": 3, "committed_at": "2024-01-01T00:00:03+00:00",
+    }
+    if unique_lsn is not None:
+        manifest["unique_lsn"] = unique_lsn
+    with open(os.path.join(path, "_manifests", "v00000003.json"), "w") as fh:
+        json.dump(manifest, fh)
+    return {1: 12, 2: 21, 4: 40}
+
+
+@pytest.mark.parametrize("unique_lsn", [False, True])
+def test_manifest_with_unique_lsn_key_reads_and_compacts(spark, tmp_path, unique_lsn):
+    """Manifests from writers that persisted ``unique_lsn`` open bare, merge
+    per-batch ``_lsn`` generations with the per-key window (the ``_mts``
+    tie-break picks b3 over b2), and compact to the same rows."""
+    from endor_blockchain_data_pipeline_spark.operators.merge import compact_buckets
+
+    want = _hand_written_store(str(tmp_path / "t"), unique_lsn=unique_lsn)
+    t = ManifestTable(str(tmp_path / "t"))
+    assert (t.n_buckets, t.key_cols) == (1, ("doc_id",))
+
+    def labels():
+        return {r.doc_id: r.label for r in t.read(spark).collect()}
+
+    assert labels() == want
+    assert t.read(spark, with_internal=True).count() == 4  # + b3's tombstone
+    compact_buckets(t, spark, "compact-1", t.multi_gen_buckets(2))
+    assert t.multi_gen_buckets(2) == [] and t.manifest()["bucket_gens"] == {"0": 1}
+    assert labels() == want
+
+
+def test_unknown_merge_strategy_is_refused(spark, tmp_path):
+    """A misspelt or removed strategy raises on LWW and additive tables
+    alike instead of silently reading with the table's default merge."""
+    _hand_written_store(str(tmp_path / "lww"))
+    _hand_written_store(str(tmp_path / "add"), semantics="additive")
+    for path in ("lww", "add"):
+        t = ManifestTable(str(tmp_path / path))
+        for bad in ("windw", "broadcast", "auto"):
+            with pytest.raises(ValueError, match="unknown merge_strategy"):
+                t.read(spark, merge_strategy=bad)
+    # the additive store's default read still returns every partial
+    assert ManifestTable(str(tmp_path / "add")).read(spark).count() == 7
+
+
 # ------------------------------------------------- concurrent append commits
 
 

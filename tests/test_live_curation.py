@@ -23,8 +23,8 @@ JOB_BUDGET = 31
 
 
 def _commit_state(spark, table, rows, batch_id, seq):
-    """rows: (conv_id, turn_idx, role, text, deleted); per-row UNIQUE _lsn
-    (seq*100+i) — the lake's default unique_lsn=True merge requires it."""
+    """rows: (conv_id, turn_idx, role, text, deleted); per-row _lsn
+    seq*100+i, so each later commit's rows out-LSN every earlier one's."""
     stamped = [r + (seq * 100 + i,) for i, r in enumerate(rows)]
     df = (
         spark.createDataFrame(

@@ -1,4 +1,5 @@
-"""Plan-shape assertions + multimodal plumbing tests."""
+"""Plan-shape assertions: scan pushdown and pruning, the winner reduce's
+HashAggregate, broadcast dimension joins, whole-stage codegen, top-k."""
 
 from __future__ import annotations
 
@@ -7,12 +8,6 @@ import pytest
 
 from endor_blockchain_data_pipeline_spark.functions.decode import decode_changes
 from endor_blockchain_data_pipeline_spark.operators.merge import lww_winner_rows
-from endor_blockchain_data_pipeline_spark.operators.multimodal import (
-    extract_image_features,
-    resize_images,
-    sample_frames,
-    synthesize_media,
-)
 from endor_blockchain_data_pipeline_spark.plans.explain import (
     codegen_stage_count,
     has_pushed_filter,
@@ -86,685 +81,3 @@ def test_topk_plans_take_ordered(spark):
     for df in (brute_force_topk(emb, q, k=10), srp_topk(emb, q, k=10, n_bits=8)):
         assert uses_take_ordered(df)
         assert not global_window_over_full_input(df)
-
-
-def test_media_features(spark):
-    media = synthesize_media(spark, n=48, seed=3)
-    imgs = media.where(F.col("kind") == "image").count()
-    feats = extract_image_features(media)
-    rows = feats.collect()
-    assert len(rows) == imgs and imgs > 0
-    for r in rows:
-        assert r["n_bytes"] == 512
-        assert 0.0 <= r["byte_entropy"] <= 8.0
-        assert len(r["phash"]) == 16
-    # determinism across partitioning
-    again = extract_image_features(media.repartition(7)).collect()
-    assert sorted((r["media_id"], r["phash"]) for r in rows) == sorted(
-        (r["media_id"], r["phash"]) for r in again
-    )
-
-
-def test_real_wav_decode(spark):
-    """The audio kernel REALLY parses WAV containers (stdlib wave): sample
-    rate, true frame counts, and sine-tone RMS ≈ amplitude/√2."""
-    import math
-
-    from endor_blockchain_data_pipeline_spark.operators.multimodal import (
-        extract_audio_features,
-        synthesize_audio_media,
-    )
-
-    media = synthesize_audio_media(spark, n=20, seed=3)
-    feats = {r["media_id"]: r for r in extract_audio_features(media).collect()}
-    assert len(feats) == 20
-    for i, r in feats.items():
-        assert r["sample_rate"] == 8000 and r["n_channels"] == 1
-        assert r["n_samples"] == 400 + (i * 97) % 400  # matches the synth
-        amp = 8000 + (i * 53) % 20000
-        # sine RMS = amp/sqrt(2); integer quantization + partial periods
-        # keep it within a few percent
-        assert abs(r["rms"] - amp / math.sqrt(2)) / (amp / math.sqrt(2)) < 0.05
-    # determinism across partitioning
-    again = {r["media_id"]: r["rms"] for r in extract_audio_features(media.repartition(5)).collect()}
-    assert again == {i: r["rms"] for i, r in feats.items()}
-
-
-def test_frame_sampling(spark):
-    media = synthesize_media(spark, n=48, seed=3)
-    frames = sample_frames(media, every_ms=10_000, max_frames=4)
-    pdf = frames.toPandas()
-    assert set(pdf["frame_idx"]) <= {0, 1, 2, 3}
-    assert (pdf.groupby("media_id")["frame_idx"].count() >= 1).all()
-    assert all(len(b) == 16 for b in pdf["frame"])
-
-
-def test_resize_shape(spark):
-    """Opaque (undecodable) blobs keep their bytes and get NULL dims —
-    same row count, nothing aborts; decodable inputs are covered by
-    test_resize_images_real_kernel."""
-    media = synthesize_media(spark, n=24, seed=3)  # opaque xxhash blobs
-    out = resize_images(media, 224, 224)
-    rows = out.collect()
-    img = media.where(F.col("kind") == "image")
-    assert len(rows) == img.count()
-    assert all(r["width"] is None and r["height"] is None for r in rows)
-    orig = {r["media_id"]: bytes(r["data"]) for r in img.collect()}
-    assert all(bytes(r["data"]) == orig[r["media_id"]] for r in rows)
-
-
-def test_bmp_features_are_real_pixel_decodes(spark):
-    """The BMP path decodes ACTUAL pixels: known images yield exact header
-    dims, pixel statistics and average-luma phash."""
-    import struct
-
-    from endor_blockchain_data_pipeline_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        decode_bmp,
-        extract_image_features,
-        synthesize_bmp,
-    )
-
-    def bmp(width, height, pixel_fn):
-        stride = (width * 3 + 3) & ~3
-        body = b"".join(
-            b"".join(pixel_fn(x, y) for x in range(width))
-            + b"\x00" * (stride - width * 3)
-            for y in range(height - 1, -1, -1)  # bottom-up
-        )
-        return (
-            b"BM"
-            + struct.pack("<IHHI", 54 + len(body), 0, 0, 54)
-            + struct.pack("<IiiHHIIiiII", 40, width, height, 1, 24, 0, len(body), 0, 0, 0, 0)
-            + body
-        )
-
-    gray = bmp(16, 16, lambda x, y: bytes([128, 128, 128]))
-    halves = bmp(16, 16, lambda x, y: bytes([0, 0, 0]) if x < 8 else bytes([255, 255, 255]))
-    rows = [
-        (0, "image", "image/bmp", bytearray(gray), 16, 16, None),
-        (1, "image", "image/bmp", bytearray(halves), 16, 16, None),
-        (2, "image", "image/bmp", bytearray(synthesize_bmp(7, seed=3, width=24, height=16)), 24, 16, None),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    feats = {r["media_id"]: r for r in extract_image_features(media).collect()}
-
-    # solid gray: pixel mean exactly 128, zero entropy, flat phash
-    assert feats[0]["byte_mean"] == 128.0
-    assert feats[0]["byte_entropy"] == 0.0
-    assert feats[0]["phash"] == "0" * 16
-    # black|white halves: mean 127.5, 1 bit of entropy, right-half-lit hash
-    assert feats[1]["byte_mean"] == 127.5
-    assert abs(feats[1]["byte_entropy"] - 1.0) < 1e-9
-    assert feats[1]["phash"] == "0f" * 8
-    # header dims round-trip on the synthetic fixture
-    w, h, px_rows = decode_bmp(synthesize_bmp(7, seed=3, width=24, height=16))
-    assert (w, h) == (24, 16) and len(px_rows) == 16 and len(px_rows[0]) == 72
-
-
-def test_image_features_dispatch_bmp_vs_stub(spark):
-    """Mixed-format batches: BMP blobs take the pixel kernel, non-BMP blobs
-    the byte-stats stub — same schema, one mapInPandas pass."""
-    from endor_blockchain_data_pipeline_spark.operators.multimodal import (
-        extract_image_features,
-        synthesize_image_media,
-        synthesize_media,
-    )
-
-    bmps = synthesize_image_media(spark, n=6, seed=5)
-    fake = synthesize_media(spark, n=24, seed=3).where(F.col("kind") == "image")
-    feats = extract_image_features(bmps.unionByName(fake))
-    got = feats.collect()
-    assert len(got) == 6 + fake.count()
-    assert all(len(r["phash"]) == 16 for r in got)
-    # determinism across partitionings (the fixture contract)
-    again = extract_image_features(bmps.unionByName(fake).repartition(5)).collect()
-    assert sorted((r["media_id"], r["phash"], r["byte_mean"]) for r in got) == sorted(
-        (r["media_id"], r["phash"], r["byte_mean"]) for r in again
-    )
-
-
-def test_audio_features_8bit_and_reject_unsupported(spark):
-    """Sample-width dispatch: 8-bit PCM decodes; 24-bit raises clearly."""
-    import io
-    import wave
-
-    from endor_blockchain_data_pipeline_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        extract_audio_features,
-    )
-
-    def wav(sampwidth, frames):
-        buf = io.BytesIO()
-        with wave.open(buf, "wb") as w:
-            w.setnchannels(1)
-            w.setsampwidth(sampwidth)
-            w.setframerate(8000)
-            w.writeframes(frames)
-        return buf.getvalue()
-
-    eight = wav(1, bytes([128, 228, 28, 128]))  # midpoint 128 => samples 0,100,-100,0
-    media = spark.createDataFrame(
-        [(0, "audio", "audio/wav", bytearray(eight), None, None, None)], MEDIA_SCHEMA
-    )
-    r = extract_audio_features(media).collect()[0]
-    assert r["n_samples"] == 4 and r["sample_rate"] == 8000
-    assert abs(r["rms"] - (20000 / 4) ** 0.5) < 1e-9
-
-    bad = wav(3, b"\x00" * 12)
-    media_bad = spark.createDataFrame(
-        [(1, "audio", "audio/wav", bytearray(bad), None, None, None)], MEDIA_SCHEMA
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="only 8/16-bit PCM"):
-        extract_audio_features(media_bad).collect()
-
-
-def test_png_decode_roundtrip_all_filters(spark):
-    """synthesize_png cycles through every scanline filter type; decode_png
-    must invert all five back to the exact md5-derived pixels."""
-    import hashlib
-
-    from endor_blockchain_data_pipeline_spark.operators.multimodal import (
-        decode_png,
-        synthesize_png,
-    )
-
-    w_, h_ = 11, 9  # odd sizes, > 5 rows so filters 0-4 all appear
-    blob = synthesize_png(3, seed=7, width=w_, height=h_)
-    w, h, rows = decode_png(blob)
-    assert (w, h) == (w_, h_)
-    for y in (0, 1, 2, 3, 4, h_ - 1):  # one row per filter type + last
-        for x in (0, 1, w_ - 1):
-            d = hashlib.md5(f"7:3:{x}:{y}".encode()).digest()
-            assert rows[y][3 * x : 3 * x + 3] == d[:3]  # BGR == digest[:3]
-
-
-def test_png_rgba_and_grayscale_decode(spark):
-    """Hand-built color-type 6 (RGBA) and 0 (gray) PNGs decode to the
-    normalized BGR rows (alpha dropped, gray replicated)."""
-    import struct
-    import zlib
-
-    from endor_blockchain_data_pipeline_spark.operators.multimodal import decode_png
-
-    def chunk(tag, body):
-        return (
-            struct.pack(">I", len(body)) + tag + body
-            + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
-        )
-
-    def png(color_type, w, h, scanlines):
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
-        return (
-            b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(scanlines)) + chunk(b"IEND", b"")
-        )
-
-    # 2x2 RGBA, filter 0: pixels (R,G,B,A)
-    sl = bytes([0, 10, 20, 30, 255, 40, 50, 60, 128,
-                0, 70, 80, 90, 0, 100, 110, 120, 7])
-    w, h, rows = decode_png(png(6, 2, 2, sl))
-    assert (w, h) == (2, 2)
-    assert rows[0] == bytes([30, 20, 10, 60, 50, 40])  # BGR, alpha gone
-    assert rows[1] == bytes([90, 80, 70, 120, 110, 100])
-
-    # 3x1 grayscale, filter 1 (Sub): raw deltas 5, +3, +250 (wraps)
-    sl = bytes([1, 5, 3, 250])
-    w, h, rows = decode_png(png(0, 3, 1, sl))
-    vals = [5, 8, 2]  # 8 + 250 mod 256
-    assert rows[0] == bytes(v for g in vals for v in (g, g, g))
-
-    # interlaced / 16-bit / palette are rejected, not misparsed
-    import pytest as _pytest
-
-    ihdr_bad = struct.pack(">IIBBBBB", 2, 2, 8, 3, 0, 0, 0)  # palette
-    bad = b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr_bad) + chunk(b"IEND", b"")
-    with _pytest.raises(ValueError, match="supported"):
-        decode_png(bad)
-
-
-def test_png_and_bmp_same_image_same_phash(spark):
-    """The SAME md5-derived image encoded as BMP and as PNG must produce
-    identical pixel features through the shared kernel — the container is
-    plumbing, the pixels are the content."""
-    from endor_blockchain_data_pipeline_spark.operators.multimodal import (
-        _decode_bmp_features,
-        _decode_png_features,
-        synthesize_bmp,
-        synthesize_png,
-    )
-
-    for i in (0, 5):
-        fb = _decode_bmp_features(synthesize_bmp(i, seed=42, width=16, height=12))
-        fp = _decode_png_features(synthesize_png(i, seed=42, width=16, height=12))
-        assert fb["phash"] == fp["phash"]
-        assert abs(fb["byte_mean"] - fp["byte_mean"]) < 1e-9
-        assert abs(fb["byte_entropy"] - fp["byte_entropy"]) < 1e-9
-
-
-def test_image_features_dispatch_png(spark):
-    """extract_image_features routes PNG blobs through the real decoder
-    inside the Arrow mapInPandas kernel (magic-byte dispatch per blob)."""
-    from endor_blockchain_data_pipeline_spark.operators.multimodal import (
-        _decode_png_features,
-        extract_image_features,
-        synthesize_png_media,
-    )
-
-    media = synthesize_png_media(spark, n=6)
-    got = {
-        r["media_id"]: (r["phash"], r["byte_entropy"])
-        for r in extract_image_features(media).collect()
-    }
-    assert len(got) == 6
-    for r in media.select("media_id", "data").collect():
-        exp = _decode_png_features(bytes(r["data"]))
-        assert got[r["media_id"]] == (exp["phash"], exp["byte_entropy"])
-
-
-def test_vectorized_kernels_match_scalar_reference():
-    """The numpy kernels (_byte_stats, _luma_grid, WAV rms) must reproduce
-    the per-byte / per-sample Python folds they replaced: mean and rms are
-    integer-exact, entropy and luma within float ulp."""
-    import hashlib
-    import math
-
-    from endor_blockchain_data_pipeline_spark.operators.multimodal import (
-        _byte_stats,
-        _luma_grid,
-    )
-
-    blob = b"".join(
-        hashlib.md5(f"parity:{i}".encode()).digest() for i in range(512)
-    )
-    mean, ent = _byte_stats(blob)
-    counts: dict[int, int] = {}
-    for x in blob:
-        counts[x] = counts.get(x, 0) + 1
-    n = len(blob)
-    ref_ent = -sum((c / n) * math.log2(c / n) for _, c in sorted(counts.items()))
-    assert mean == sum(blob) / n  # int64 sum: exact
-    assert abs(ent - ref_ent) < 1e-12
-    assert _byte_stats(b"") == (0.0, 0.0)
-
-    w, h = 7, 5
-    rows = [blob[r * w * 3 : (r + 1) * w * 3] for r in range(h)]
-    luma = _luma_grid(w, h, rows)
-    for y in range(h):
-        for x in range(w):
-            ref = (
-                0.114 * rows[y][3 * x]
-                + 0.587 * rows[y][3 * x + 1]
-                + 0.299 * rows[y][3 * x + 2]
-            )
-            assert luma[y][x] == ref  # same IEEE op order: bit-equal
-
-
-def test_wav_rms_matches_scalar_reference(spark):
-    """Vectorized WAV RMS (int64 dot) == the per-sample Python fold."""
-    import io
-    import math
-    import struct
-    import wave
-
-    from endor_blockchain_data_pipeline_spark.operators.multimodal import (
-        extract_audio_features,
-        synthesize_audio_media,
-    )
-
-    media = synthesize_audio_media(spark, n=3)
-    got = {
-        r["media_id"]: r["rms"] for r in extract_audio_features(media).collect()
-    }
-    for r in media.select("media_id", "data").collect():
-        with wave.open(io.BytesIO(bytes(r["data"])), "rb") as w:
-            ns, ch, sw = w.getnframes(), w.getnchannels(), w.getsampwidth()
-            raw = w.readframes(ns)
-        assert sw == 2
-        samples = struct.unpack(f"<{ns * ch}h", raw)
-        ref = math.sqrt(sum(s * s for s in samples) / len(samples))
-        assert got[r["media_id"]] == ref
-
-
-def test_jpeg_roundtrip_and_subsampling():
-    """The engine's own baseline JPEG codec: encode->decode roundtrip is
-    near-lossless at q=100 (4:4:4), the 4:2:0 path preserves luma (chroma
-    loss is the subsampling, not a bug), and odd dimensions pad correctly
-    in both layouts."""
-    import numpy as np
-
-    from endor_blockchain_data_pipeline_spark.operators.jpeg import (
-        decode_jpeg,
-        encode_jpeg,
-    )
-    from endor_blockchain_data_pipeline_spark.operators.multimodal import (
-        _md5_pixel_rows,
-    )
-
-    w, h = 24, 16
-    rows = _md5_pixel_rows(7, 42, w, h)
-    a = np.frombuffer(b"".join(rows), dtype=np.uint8).astype(float)
-
-    blob = encode_jpeg(w, h, rows, quality=100)
-    w2, h2, rows2 = decode_jpeg(blob)
-    assert (w2, h2) == (w, h)
-    b = np.frombuffer(b"".join(rows2), dtype=np.uint8).astype(float)
-    assert np.abs(a - b).mean() < 1.0  # near-lossless at q=100
-
-    def luma(rs):
-        arr = np.frombuffer(b"".join(rs), dtype=np.uint8).reshape(h, w, 3).astype(float)
-        return 0.114 * arr[:, :, 0] + 0.587 * arr[:, :, 1] + 0.299 * arr[:, :, 2]
-
-    blob420 = encode_jpeg(w, h, rows, quality=100, subsampling="420")
-    _, _, rows420 = decode_jpeg(blob420)
-    assert np.abs(luma(rows) - luma(rows420)).mean() < 1.0
-
-    for sub in ("444", "420"):
-        r_odd = _md5_pixel_rows(3, 42, 21, 13)
-        w3, h3, _ = decode_jpeg(encode_jpeg(21, 13, r_odd, subsampling=sub))
-        assert (w3, h3) == (21, 13)
-
-
-def test_jpeg_same_image_phash_close_to_bmp():
-    """BMP and q=100 JPEG of the SAME md5 image produce near-identical
-    perceptual hashes — the decode is real pixels, not byte statistics
-    (byte stats of a JPEG blob would be entropy-coded noise)."""
-    from endor_blockchain_data_pipeline_spark.operators.multimodal import (
-        _decode_bmp_features,
-        _decode_jpeg_features,
-        synthesize_bmp,
-        synthesize_jpeg,
-    )
-
-    for i in (0, 5):
-        fb = _decode_bmp_features(synthesize_bmp(i, seed=42, width=16, height=12))
-        fj = _decode_jpeg_features(synthesize_jpeg(i, seed=42, width=16, height=12))
-        hamming = bin(int(fb["phash"], 16) ^ int(fj["phash"], 16)).count("1")
-        assert hamming <= 8  # q=100 shifts block means by <1 luma step
-        assert abs(fb["byte_mean"] - fj["byte_mean"]) < 2.0
-
-
-def test_image_features_dispatch_jpeg(spark):
-    """extract_image_features routes JPEG blobs (both samplings) through
-    the real decoder; a non-baseline stream degrades to the stub instead
-    of aborting the pass."""
-    import pandas as pd
-
-    from endor_blockchain_data_pipeline_spark.operators.multimodal import (
-        _decode_jpeg_features,
-        extract_image_features,
-        synthesize_jpeg_media,
-    )
-
-    media = synthesize_jpeg_media(spark, n=6)
-    got = {
-        r["media_id"]: (r["phash"], r["byte_entropy"])
-        for r in extract_image_features(media).collect()
-    }
-    assert len(got) == 6
-    for r in media.select("media_id", "data").collect():
-        exp = _decode_jpeg_features(bytes(r["data"]))
-        assert got[r["media_id"]] == (exp["phash"], exp["byte_entropy"])
-
-    # a fake progressive stream (SOF2) keeps the JPEG magic but must fall
-    # back to byte statistics rather than raise
-    bogus = b"\xff\xd8\xff\xc2" + b"\x00\x0b" + b"\x08\x00\x10\x00\x10\x01\x01\x11\x00" + b"\xff\xd9"
-    rows = [(99, "image", "image/jpeg", bytearray(bogus), 16, 16, None)]
-    from endor_blockchain_data_pipeline_spark.operators.multimodal import MEDIA_SCHEMA
-
-    bad = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    feats = extract_image_features(bad).collect()
-    assert len(feats) == 1 and feats[0]["n_bytes"] == len(bogus)
-
-
-def test_mjpeg_avi_demux_roundtrip():
-    """mux -> demux returns the exact frame blobs and the frame clock."""
-    from endor_blockchain_data_pipeline_spark.operators.jpeg import encode_jpeg
-    from endor_blockchain_data_pipeline_spark.operators.multimodal import (
-        _md5_pixel_rows,
-        demux_mjpeg_avi,
-        mux_mjpeg_avi,
-    )
-
-    frames = [
-        encode_jpeg(16, 16, _md5_pixel_rows(f, 42, 16, 16)) for f in range(5)
-    ]
-    blob = mux_mjpeg_avi(frames, 16, 16, fps=10)
-    uspf, got = demux_mjpeg_avi(blob)
-    assert uspf == 100_000
-    assert got == frames  # byte-identical payloads through the container
-
-
-def test_sample_frames_real_avi_path(spark):
-    """sample_frames demuxes REAL AVI blobs: sampled frames are full JPEG
-    blobs at the container's frame clock, decodable by the image kernel —
-    and non-AVI blobs still take the byte-slice stub in the same pass."""
-    import pandas as pd
-
-    from endor_blockchain_data_pipeline_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        _decode_jpeg_features,
-        sample_frames,
-        synthesize_mjpeg_media,
-    )
-
-    media = synthesize_mjpeg_media(spark, n=3, n_frames=12, fps=10)  # 1.2s each
-    frames = sample_frames(media, every_ms=500, max_frames=4).collect()
-    by_media = {}
-    for r in frames:
-        by_media.setdefault(r["media_id"], []).append(r)
-    assert set(by_media) == {0, 1, 2}
-    for mid, rs in by_media.items():
-        rs.sort(key=lambda r: r["frame_idx"])
-        # 500ms ticks on a 100ms frame clock: frames 0, 5, 10
-        assert [r["frame_idx"] for r in rs] == [0, 5, 10]
-        assert [r["frame_ms"] for r in rs] == [0, 500, 1000]
-        for r in rs:
-            f = _decode_jpeg_features(bytes(r["frame"]))  # real JPEG inside
-            assert f["n_bytes"] == len(bytes(r["frame"]))
-
-    # a non-AVI video blob degrades to the 16-byte slice stub, same schema
-    junk = spark.createDataFrame(
-        [(9, "video", "video/mp4", bytearray(b"\x00" * 400), None, None, 2000)],
-        MEDIA_SCHEMA,
-    )
-    stub = sample_frames(junk, every_ms=1000, max_frames=2).collect()
-    assert len(stub) == 2 and all(len(bytes(r["frame"])) == 16 for r in stub)
-
-
-def test_resize_images_real_kernel(spark):
-    """resize_images decodes (BMP/PNG/JPEG), nearest-neighbor resamples,
-    and re-encodes: output BMPs decode to the requested dims, the SAME
-    image arriving as BMP and PNG resizes pixel-identically, and an
-    undecodable blob passes through with NULL dims."""
-    from endor_blockchain_data_pipeline_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        decode_bmp,
-        resize_images,
-        synthesize_bmp,
-        synthesize_png,
-    )
-
-    rows = [
-        (1, "image", "image/bmp", bytearray(synthesize_bmp(5, 42, 24, 16)), 24, 16, None),
-        (2, "image", "image/png", bytearray(synthesize_png(5, 42, 24, 16)), 24, 16, None),
-        (3, "image", "image/gif", bytearray(b"GIF89a" + b"\x01" * 64), 8, 8, None),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    got = {r["media_id"]: r for r in resize_images(media, 8, 8).collect()}
-
-    assert got[3]["width"] is None and bytes(got[3]["data"]) == bytes(rows[2][3])
-    w1, h1, rows1 = decode_bmp(bytes(got[1]["data"]))
-    w2, h2, rows2 = decode_bmp(bytes(got[2]["data"]))
-    assert (w1, h1) == (8, 8) == (got[1]["width"], got[1]["height"])
-    assert (w2, h2) == (8, 8)
-    assert rows1 == rows2  # same source pixels -> identical resample
-
-    # jpeg output format: the resized blob is a decodable baseline JPEG
-    from endor_blockchain_data_pipeline_spark.operators.jpeg import decode_jpeg
-
-    gj = {r["media_id"]: r for r in resize_images(media, 8, 8, out_format="jpeg").collect()}
-    wj, hj, _ = decode_jpeg(bytes(gj[1]["data"]))
-    assert (wj, hj) == (8, 8)
-
-
-def test_synthesize_bmp_stable_after_refactor():
-    """synthesize_bmp through encode_bmp stays byte-identical to the old
-    inline writer (fixtures and phash expectations must not move)."""
-    import hashlib
-    import struct as _struct
-
-    from endor_blockchain_data_pipeline_spark.operators.multimodal import synthesize_bmp
-
-    width, height, media_id, seed = 10, 6, 4, 42
-    stride = (width * 3 + 3) & ~3
-    pixel_bytes = stride * height
-    rows = []
-    for y in range(height - 1, -1, -1):
-        row = bytearray()
-        for x in range(width):
-            row += hashlib.md5(f"{seed}:{media_id}:{x}:{y}".encode()).digest()[:3]
-        row += b"\x00" * (stride - width * 3)
-        rows.append(bytes(row))
-    old = (
-        b"BM"
-        + _struct.pack("<IHHI", 54 + pixel_bytes, 0, 0, 54)
-        + _struct.pack("<IiiHHIIiiII", 40, width, height, 1, 24, 0, pixel_bytes, 2835, 2835, 0, 0)
-        + b"".join(rows)
-    )
-    assert synthesize_bmp(media_id, seed, width, height) == old
-
-
-def test_progressive_jpeg_decodes_bit_identical_to_baseline():
-    """Progressive (SOF2) decode: the libjpeg-style scan script (DC
-    successive approximation, split spectral bands at reduced precision,
-    AC refinement passes with EOB runs) reconstructs EXACTLY the pixels of
-    the baseline encoding at the same quality — any bug in the point
-    transforms, corrections, or EOB-run bookkeeping would corrupt this."""
-    from endor_blockchain_data_pipeline_spark.operators.jpeg import (
-        decode_jpeg,
-        encode_jpeg,
-        encode_jpeg_progressive,
-    )
-    from endor_blockchain_data_pipeline_spark.operators.multimodal import (
-        _md5_pixel_rows,
-    )
-
-    for w, h in ((24, 16), (21, 13)):
-        rows = _md5_pixel_rows(7, 42, w, h)
-        for q in (75, 100):
-            base = decode_jpeg(encode_jpeg(w, h, rows, quality=q))
-            prog = decode_jpeg(encode_jpeg_progressive(w, h, rows, quality=q))
-            assert base[0] == prog[0] and base[1] == prog[1]
-            assert all(a == b for a, b in zip(base[2], prog[2]))
-
-
-def test_image_features_dispatch_progressive_jpeg(spark):
-    """A real progressive JPEG flows through the REAL decoder in the
-    feature pass — same features as its baseline twin."""
-    from endor_blockchain_data_pipeline_spark.operators.jpeg import (
-        encode_jpeg,
-        encode_jpeg_progressive,
-    )
-    from endor_blockchain_data_pipeline_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        _md5_pixel_rows,
-        extract_image_features,
-    )
-
-    rows_px = _md5_pixel_rows(3, 42, 16, 12)
-    base = encode_jpeg(16, 12, rows_px, quality=100)
-    prog = encode_jpeg_progressive(16, 12, rows_px, quality=100)
-    media = spark.createDataFrame(
-        [
-            (1, "image", "image/jpeg", bytearray(base), 16, 12, None),
-            (2, "image", "image/jpeg", bytearray(prog), 16, 12, None),
-        ],
-        MEDIA_SCHEMA,
-    )
-    got = {
-        r["media_id"]: (r["phash"], r["byte_mean"])
-        for r in extract_image_features(media).collect()
-    }
-    assert got[1] == got[2]  # identical pixels, identical features
-
-
-def test_mp4_mux_demux_roundtrip():
-    """ISO BMFF mux -> demux returns exact frame blobs + frame clock, for
-    single-chunk, multi-chunk (stsc runs), and 64-bit (largesize/co64)
-    layouts."""
-    from endor_blockchain_data_pipeline_spark.operators.jpeg import encode_jpeg
-    from endor_blockchain_data_pipeline_spark.operators.mp4 import (
-        demux_mjpeg_mp4,
-        mux_mjpeg_mp4,
-    )
-    from endor_blockchain_data_pipeline_spark.operators.multimodal import (
-        _md5_pixel_rows,
-    )
-
-    frames = [
-        encode_jpeg(16, 16, _md5_pixel_rows(f, 42, 16, 16)) for f in range(7)
-    ]
-    for kw in (
-        {},
-        {"frames_per_chunk": 3},  # chunks of 3,3,1 -> two stsc runs
-        {"frames_per_chunk": 2, "large": True},  # largesize mdat + co64
-    ):
-        blob = mux_mjpeg_mp4(frames, 16, 16, fps=10, **kw)
-        uspf, got = demux_mjpeg_mp4(blob)
-        assert uspf == 100_000, kw
-        assert got == frames, kw
-
-
-def test_mp4_demux_rejects_corrupt():
-    """Truncation / non-BMFF input raises (sample_frames then degrades)."""
-    import pytest as _pytest
-
-    from endor_blockchain_data_pipeline_spark.operators.jpeg import encode_jpeg
-    from endor_blockchain_data_pipeline_spark.operators.mp4 import (
-        demux_mjpeg_mp4,
-        mux_mjpeg_mp4,
-    )
-    from endor_blockchain_data_pipeline_spark.operators.multimodal import (
-        _md5_pixel_rows,
-    )
-
-    frames = [encode_jpeg(16, 16, _md5_pixel_rows(0, 42, 16, 16))]
-    blob = mux_mjpeg_mp4(frames, 16, 16)
-    with _pytest.raises(ValueError):
-        demux_mjpeg_mp4(b"\x00" * 40)  # not BMFF
-    with _pytest.raises(ValueError):
-        demux_mjpeg_mp4(blob[: len(blob) // 2])  # moov truncated away
-    # mdat shorter than the sample table claims -> range check fires
-    cut = blob[:40]
-    with _pytest.raises(ValueError):
-        demux_mjpeg_mp4(cut)
-
-
-def test_sample_frames_real_mp4_path(spark):
-    """sample_frames on MP4 media: same frame clock, same decodable JPEG
-    payloads as the AVI path over identical source frames."""
-    from endor_blockchain_data_pipeline_spark.operators.multimodal import (
-        _decode_jpeg_features,
-        sample_frames,
-        synthesize_mjpeg_media,
-        synthesize_mp4_media,
-    )
-
-    mp4 = synthesize_mp4_media(spark, n=3, n_frames=12, fps=10)
-    avi = synthesize_mjpeg_media(spark, n=3, n_frames=12, fps=10)
-    got_mp4 = sample_frames(mp4, every_ms=500, max_frames=4).collect()
-    got_avi = sample_frames(avi, every_ms=500, max_frames=4).collect()
-
-    key = lambda r: (r["media_id"], r["frame_idx"])
-    m4 = {key(r): r for r in got_mp4}
-    av = {key(r): r for r in got_avi}
-    assert set(m4) == set(av) and len(m4) == 9  # 3 media x frames 0,5,10
-    for k in m4:
-        assert m4[k]["frame_ms"] == av[k]["frame_ms"]
-        # identical source frames -> byte-identical JPEGs via BOTH containers
-        assert bytes(m4[k]["frame"]) == bytes(av[k]["frame"])
-        f = _decode_jpeg_features(bytes(m4[k]["frame"]))
-        assert f["n_bytes"] == len(bytes(m4[k]["frame"]))
