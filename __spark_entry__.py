@@ -21,12 +21,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from endor_blockchain_data_pipeline_spark.functions.decode import normalize_text_expr
-from endor_blockchain_data_pipeline_spark.functions.text import (
-    lang_guess_expr,
-    quality_score_expr,
-    stopword_hits_expr,
-    token_count_expr,
-)
+from endor_blockchain_data_pipeline_spark.functions.text import token_count_expr
 from endor_blockchain_data_pipeline_spark.operators.dedup import (
     dedup_exact,
     dedup_simhash,
@@ -553,7 +548,7 @@ def q_asof_state_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user sessionization at a 30-minute inactivity gap — native
-    merging-window session_window (same operator streaming reuses)."""
+    merging-window session_window."""
     from endor_blockchain_data_pipeline_spark.operators.temporal import session_windows
 
     return session_windows(
@@ -825,14 +820,8 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    # small_commit_rows: this query's per-batch band/label frames are
-    # documents-table-sized (thousands to tens of thousands of rows at any
-    # bench SF), so its four fold commits take the lake's driver-side
-    # small-commit staging; write path only — the keep-list rows are
-    # identical (parity pinned by tests/test_small_commit.py) and a larger
-    # corpus falls back to the distributed writer.
     idx = DedupIndex(
-        spark, _fresh_scratch("incdedup", sf_dir), small_commit_rows=1_000_000
+        spark, _fresh_scratch("incdedup", sf_dir)
     )  # k_shingle=12, n_hashes=4, n_bands=2, md5_long
     idx.add_batch(d.where(F.col("doc_id") % 2 == 0), "b-even")
     idx.add_batch(d.where(F.col("doc_id") % 2 == 1), "b-odd")
@@ -850,10 +839,7 @@ def q_incremental_dedup_remove(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    # same small-commit rationale as q_incremental_dedup above
-    idx = DedupIndex(
-        spark, _fresh_scratch("incdedup-rm", sf_dir), small_commit_rows=1_000_000
-    )
+    idx = DedupIndex(spark, _fresh_scratch("incdedup-rm", sf_dir))
     idx.add_batch(d.where(F.col("doc_id") % 2 == 0), "b-even")
     idx.add_batch(d.where(F.col("doc_id") % 2 == 1), "b-odd")
     idx.remove_docs(list(_REMOVED_DOC_IDS), "rm-takedown")

@@ -83,6 +83,12 @@ class CDCJob:
     def batch_id_for(lo: int, hi: int) -> str:
         return f"lsn-{lo}-{hi}"
 
+    def _compact_due(self, table: ManifestTable, batch_id: str) -> None:
+        """The after-commit step of every sink: fold the buckets that reached
+        ``compact_threshold`` generations (idempotent per ``batch_id``)."""
+        due = table.multi_gen_buckets(self.compact_threshold)
+        merge_mod.compact_buckets(table, self.spark, f"compact-{batch_id}", due)
+
     def _apply(self, ranges: list[tuple[int, int]], depth: int) -> list[dict]:
         """The catch-up loop: apply each uncommitted (lo, hi] range in order.
 
@@ -101,10 +107,7 @@ class CDCJob:
         def after_commit(batch_id: str, hi: int, manifest: dict) -> None:
             results.append(manifest)
             self.checkpoint.record(batch_id, hi)
-            due = self.table.multi_gen_buckets(self.compact_threshold)
-            merge_mod.compact_buckets(
-                self.table, self.spark, f"compact-{batch_id}", due
-            )
+            self._compact_due(self.table, batch_id)
 
         def commit_oldest() -> None:
             lo, hi, batch_id, fut, t0 = inflight.pop(0)
@@ -164,6 +167,35 @@ class CDCJob:
         )
         return self._apply(ranges, depth=2)
 
+    def run_fanout_to_watermark(
+        self,
+        tool_table: ManifestTable,
+        stats_table: ManifestTable,
+        batch_size: int,
+        limit_batches: int | None = None,
+    ) -> list[dict]:
+        """E2 catch-up loop: every batch fans out to the state table plus
+        the tool and stats sinks off ONE persisted decode
+        (``operators/fanout.py``). The resume watermark is the MINIMUM of
+        the three sinks' watermarks, so a crash between sink commits
+        re-enters the partially-applied batch and fills only the missing
+        sinks (their batch registries skip the done ones). Each sink then
+        takes the same after-commit compaction as ``_apply``."""
+        from endor_blockchain_data_pipeline_spark.operators.fanout import fanout_batch
+
+        sinks = (self.table, tool_table, stats_table)
+        lo0 = min(t.watermark() for t in sinks)
+        results = []
+        for lo, hi in _lsn_ranges(self.wal, lo0, batch_size, limit_batches):
+            batch_id = self.batch_id_for(lo, hi)
+            results.append(fanout_batch(
+                ranged_scan(self.wal, lo, hi), batch_id, lo, hi, *sinks,
+                lineage=self.lineage, est_rows=hi - lo,
+            ))
+            for t in sinks:
+                self._compact_due(t, batch_id)
+        return results
+
     def read_state(self) -> DataFrame:
         """Current logical table state (tombstones dropped, internals hidden)."""
         return self.table.read(self.spark)
@@ -202,32 +234,6 @@ class CDCJob:
                 changed, f"cur-{self.batch_id_for(lo, hi)}", lsn_hi=hi
             )
         return results
-
-
-def run_fanout_to_watermark(
-    spark: SparkSession,
-    wal: DataFrame,
-    state_table: ManifestTable,
-    tool_table: ManifestTable,
-    stats_table: ManifestTable,
-    batch_size: int,
-    limit_batches: int | None = None,
-) -> list[dict]:
-    """E2 catch-up loop: every batch fans out to state + tool + stats sinks
-    off ONE persisted decode (``operators/fanout.py``). The resume watermark
-    is the MINIMUM of the three sinks' watermarks, so a crash between sink
-    commits re-enters the partially-applied batch and fills only the
-    missing sinks (their batch registries skip the done ones)."""
-    from endor_blockchain_data_pipeline_spark.operators.fanout import fanout_batch
-
-    lo0 = min(t.watermark() for t in (state_table, tool_table, stats_table))
-    return [
-        fanout_batch(
-            ranged_scan(wal, lo, hi), CDCJob.batch_id_for(lo, hi), lo, hi,
-            state_table, tool_table, stats_table, est_rows=hi - lo,
-        )
-        for lo, hi in _lsn_ranges(wal, lo0, batch_size, limit_batches)
-    ]
 
 
 def brute_force_state(decoded_wal: DataFrame) -> DataFrame:
@@ -523,6 +529,7 @@ if __name__ == "__main__":
             raise SystemExit(f"unknown feed kind {kind!r}")
     else:
         wal = generate_wal(spark, args.events, n_convs=args.convs)
+    job = CDCJob(spark, table, wal, compact_threshold=args.compact_threshold)
     if args.fanout:
         tool_t = ManifestTable(args.table + "_tool", n_buckets=args.buckets)
         stats_t = ManifestTable(
@@ -531,9 +538,7 @@ if __name__ == "__main__":
         )
         lo0 = min(t.watermark() for t in (table, tool_t, stats_t))
         t0 = time.time()
-        commits = run_fanout_to_watermark(
-            spark, wal, table, tool_t, stats_t, args.batch_size
-        )
+        commits = job.run_fanout_to_watermark(tool_t, stats_t, args.batch_size)
         dt = time.time() - t0
         applied = sum(1 for r in commits if any(v is not None for v in r.values()))
         # Event count from the watermark DELTA for synthetic feeds too: an
@@ -545,7 +550,6 @@ if __name__ == "__main__":
             f"{dt:.1f}s = {n/max(dt,1e-9):,.0f} events/sec"
         )
         raise SystemExit(0)
-    job = CDCJob(spark, table, wal, compact_threshold=args.compact_threshold)
     lo0 = job.checkpoint.last_lsn()
     t0 = time.time()
     if args.curate_live:

@@ -28,6 +28,8 @@ pass + N cheap projections, not N decode passes.
 
 from __future__ import annotations
 
+import time
+
 import pyspark.sql.functions as F
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
@@ -106,6 +108,7 @@ def fanout_batch(
     if not pending:
         return results
 
+    t0 = time.time()
     winners = lww_winner_rows(raw, est_rows=est_rows)
     decoded = decode_changes(winners).persist(StorageLevel.MEMORY_AND_DISK)
     try:
@@ -115,7 +118,8 @@ def fanout_batch(
             )
             staged = state_table.stage(new_state, batch_id, est_rows=est_rows)
             results["state"] = commit_staged_batch(
-                state_table, staged, batch_id, lsn_lo, lsn_hi, lineage=lineage
+                state_table, staged, batch_id, lsn_lo, lsn_hi,
+                lineage=lineage, t_start=t0,
             )
         if "tool" in pending:
             tool_state = changes_to_state(tool_calls_view(decoded), batch_id).withColumn(
@@ -123,7 +127,7 @@ def fanout_batch(
             )
             staged = tool_table.stage(tool_state, batch_id, est_rows=est_rows)
             results["tool"] = commit_staged_batch(
-                tool_table, staged, batch_id, lsn_lo, lsn_hi
+                tool_table, staged, batch_id, lsn_lo, lsn_hi, t_start=t0
             )
         if "stats" in pending:
             stats_state = _stats_to_state(
@@ -133,7 +137,7 @@ def fanout_batch(
             )
             staged = stats_table.stage(stats_state, batch_id, est_rows=est_rows)
             results["stats"] = commit_staged_batch(
-                stats_table, staged, batch_id, lsn_lo, lsn_hi
+                stats_table, staged, batch_id, lsn_lo, lsn_hi, t_start=t0
             )
     finally:
         decoded.unpersist()

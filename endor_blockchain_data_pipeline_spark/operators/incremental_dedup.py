@@ -47,7 +47,7 @@ For pandas entrants the fold hands back the label rows it wrote, so
 ``LiveCuration`` joins those instead of reading ``clusters`` back; only a
 fold replayed after a crash, or the distributed twin, is read back by batch
 id. Every read excludes the batch id, so a replay after a crash between the
-two commits recomputes the identical delta. ``driver_row_limit`` bounds
+two commits recomputes the identical delta. ``DRIVER_ROW_LIMIT`` bounds
 each collect of the fold in rows: probe hits, affected-cluster members and
 key-sharing entrant band rows. Past it the same fold runs as pure
 DataFrames (``_fold_distributed``) — nothing corpus-sized reaches the
@@ -97,6 +97,10 @@ class DedupIndex:
     """
 
     PARAMS = ("k_shingle", "n_hashes", "n_bands", "hash_fn")
+    # the most rows one fold collect may bring to the driver (probe hits,
+    # affected-cluster members, key-sharing entrant band rows); past it the
+    # fold runs distributed
+    DRIVER_ROW_LIMIT = DUP_CLUSTERS_DRIVER_PAIR_LIMIT
 
     def __init__(
         self,
@@ -109,9 +113,7 @@ class DedupIndex:
         id_col: str = "doc_id",
         text_col: str = "text",
         n_buckets: int = 16,
-        driver_row_limit: int | None = None,
         id_type: str = "long",
-        small_commit_rows: int | None = None,
     ) -> None:
         if id_type not in ("long", "string"):
             raise ValueError(f"id_type must be 'long' or 'string', got {id_type!r}")
@@ -124,14 +126,6 @@ class DedupIndex:
         # union-find keys, createDataFrame rows)
         self._pyid = int if id_type == "long" else str
         self._np = "int64" if id_type == "long" else object
-        # the most rows one fold collect may bring to the driver (probe
-        # hits, affected-cluster members, key-sharing entrant band rows);
-        # past it the fold runs distributed
-        self.driver_row_limit = (
-            DUP_CLUSTERS_DRIVER_PAIR_LIMIT
-            if driver_row_limit is None
-            else driver_row_limit
-        )
         passed = {
             "k_shingle": k_shingle,
             "n_hashes": n_hashes,
@@ -167,24 +161,21 @@ class DedupIndex:
             self.params["id_type"] = id_type
             with open(pfile, "w") as fh:
                 json.dump(self.params, fh)
-        # small_commit_rows: the row bound up to which a commit stages on
-        # the driver (None: the lake's DRIVER_STAGE_ROW_LIMIT). A driver fold
-        # commits pandas-built frames, whose plans carry their row count;
-        # the distributed folds' frames are unbounded and always stage
-        # distributed (see ManifestTable.stage).
+        # A driver fold commits pandas-built frames, whose plans carry their
+        # row count, so up to the lake's DRIVER_STAGE_ROW_LIMIT they stage on
+        # the driver; the distributed folds' frames are unbounded and always
+        # stage distributed (see ManifestTable.stage).
         self.bands = ManifestTable(
             os.path.join(root, "bands"),
             n_buckets=n_buckets,
             key_cols=(id_col, "band_idx"),
             bucket_key=id_col,
-            small_commit_rows=small_commit_rows,
         )
         self.clusters = ManifestTable(
             os.path.join(root, "clusters"),
             n_buckets=n_buckets,
             key_cols=(id_col,),
             bucket_key=id_col,
-            small_commit_rows=small_commit_rows,
         )
 
     # ---------------- reads ----------------
@@ -286,7 +277,7 @@ class DedupIndex:
         a key with another entrant or with a remaining member reach the
         driver, and its label rows are written by a join. The fold runs on
         the driver unless a collect — probe hits, affected-cluster members
-        or key-sharing entrant band rows — exceeds ``driver_row_limit``
+        or key-sharing entrant band rows — exceeds ``DRIVER_ROW_LIMIT``
         rows; then the pure-DataFrame twin runs."""
         import numpy as np
         import pandas as pd
@@ -302,7 +293,7 @@ class DedupIndex:
                 "replayed_bands": True,
                 "replayed_clusters": True,
             }, None
-        id_col, limit = self.id_col, self.driver_row_limit
+        id_col, limit = self.id_col, self.DRIVER_ROW_LIMIT
         cols = [id_col, "band_idx", "band_key"]
         if isinstance(leave, DataFrame):
             leave = _arrow_col(
@@ -580,7 +571,7 @@ class DedupIndex:
             .distinct()
         )
         labels = dup_clusters(
-            edges, driver_pair_limit=self.driver_row_limit, assume_distinct=True
+            edges, driver_pair_limit=self.DRIVER_ROW_LIMIT, assume_distinct=True
         ).select(F.col("node").alias("_node"), F.col("cluster_id").alias("_lab"))
 
         def relabel(df):

@@ -133,7 +133,6 @@ class LiveCuration:
         dup_word_max: float | None = None,
         symbol_ratio_max: float | None = None,
         n_buckets: int = 16,
-        small_commit_rows: int | None = None,
         **index_params,
     ) -> None:
         self.spark = spark
@@ -174,22 +173,20 @@ class LiveCuration:
             with open(pfile, "w") as fh:
                 json.dump(self.params, fh)
         # Refresh commits are built from driver-held deltas, so each passes
-        # its row count; up to small_commit_rows rows (None: the lake's
-        # DRIVER_STAGE_ROW_LIMIT) a store stages on the driver (one Arrow
-        # collect + local bucket writes instead of a shuffle+write job).
+        # its row count; up to the lake's DRIVER_STAGE_ROW_LIMIT rows a store
+        # stages on the driver (one Arrow collect + local bucket writes
+        # instead of a shuffle+write job).
         self.exact = ManifestTable(
             os.path.join(root, "exact"),
             n_buckets=n_buckets,
             key_cols=("fingerprint", conv_col),
             bucket_key="fingerprint",
-            small_commit_rows=small_commit_rows,
         )
         self.verdicts = ManifestTable(
             os.path.join(root, "verdicts"),
             n_buckets=n_buckets,
             key_cols=(conv_col,),
             bucket_key=conv_col,
-            small_commit_rows=small_commit_rows,
         )
         self.near = DedupIndex(
             spark,
@@ -197,7 +194,6 @@ class LiveCuration:
             id_col=conv_col,
             id_type="string",
             n_buckets=n_buckets,
-            small_commit_rows=small_commit_rows,
             **index_params,
         )
 

@@ -15,12 +15,13 @@
   bucket join replaces the full scan and recall is tuned by n_tables ×
   n_bits.
 - IVF ANN: inverted-file pruning with a deterministic coarse quantizer —
-  K dataset rows (fixed ids) act as centroids, every vector is assigned to
-  its nearest centroid's bucket (K literal-array cosine folds, argmax with
+  K dataset rows (fixed ids) act as centroids, optionally refined by
+  order-independent Lloyd iterations; every vector is assigned to its
+  nearest centroid's bucket (K literal-array cosine folds, argmax with
   ascending-id tie-break), queries probe only their n_probe nearest
-  buckets. No k-means training step, fully reproducible in the DuckDB
-  oracle; at scale the assignment becomes a materialized partition column
-  and the probe filter becomes partition pruning.
+  buckets. The assignment is computed inline per query, so there is no
+  stored index to keep in sync, and every step is reproducible in the
+  DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -359,12 +360,10 @@ def ivf_topk(
     """IVF ANN top-k: score only vectors assigned to the query's ``n_probe``
     nearest centroid buckets.
 
-    The classic inverted-file pruning shape: at scale the assignment is a
-    one-off materialized column (partition the table by bucket and the
-    probe filter becomes partition pruning — scan n_probe/K of the data);
-    here it is computed inline so the operator stays self-contained. Probe
-    buckets are chosen DRIVER-side from the collected centroids with a
-    bit-identical cosine — zero extra Spark jobs at query time. Recall < 1
+    The classic inverted-file pruning shape, with the assignment computed
+    inline so the operator needs no stored index. Probe buckets are chosen
+    DRIVER-side from the collected centroids with a bit-identical cosine —
+    zero extra Spark jobs at query time. Recall < 1
     by construction, tuned by n_probe/K; brute_force_topk is the exact
     baseline."""
     ranked = sorted(
@@ -377,49 +376,6 @@ def ivf_topk(
     cands = parallelize_for_fanout(df).where(
         ivf_assign_expr(vec_col, centroids).isin(probe_ids)
     )
-    scored = cands.select(
-        F.col(id_col),
-        F.round(cosine_expr(F.col(vec_col), q, len(query_vec)), 6).alias("cos_sim"),
-    )
-    return _ranked_topk(scored, k, id_col)
-
-
-def ivf_write_index(
-    df: DataFrame,
-    path: str,
-    centroids: list[tuple[int, list[float]]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
-    """Materialize the IVF inverted file: the table partitioned on the
-    assigned bucket (``bucket=<cid>/`` directories). The one-off assignment
-    pass is what turns query-time bucket filtering into PARTITION PRUNING —
-    a probe reads n_probe/K of the files and never touches the rest (the
-    claim ``ivf_topk`` makes inline; here it is the physical layout,
-    asserted on the plan's PartitionFilters in tests)."""
-    df.withColumn("bucket", ivf_assign_expr(vec_col, centroids)).write.mode(
-        "overwrite"
-    ).partitionBy("bucket").parquet(path)
-
-
-def ivf_topk_indexed(
-    spark,
-    path: str,
-    query_vec: list[float],
-    centroids: list[tuple[int, list[float]]],
-    k: int = 10,
-    n_probe: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """IVF top-k over a materialized index: the bucket filter prunes whole
-    partitions at planning time (no assignment recompute, no full scan)."""
-    ranked = sorted(
-        ((-_cosine_py(query_vec, cv), cid) for cid, cv in centroids)
-    )[:n_probe]
-    probe_ids = [cid for _, cid in ranked]
-    q = F.lit([float(x) for x in query_vec])
-    cands = spark.read.parquet(path).where(F.col("bucket").isin(probe_ids))
     scored = cands.select(
         F.col(id_col),
         F.round(cosine_expr(F.col(vec_col), q, len(query_vec)), 6).alias("cos_sim"),
@@ -472,237 +428,3 @@ def embedding_near_dup(
     )
     return pairs.where(F.col("cos_sim") >= threshold)
 
-
-class IvfIndex:
-    """Incremental materialized IVF index under one root directory.
-
-    The r4 index (`ivf_write_index`) was build-once; this puts the ANN
-    index under the same incremental contract as the dedup index: new
-    embedding batches APPEND into the bucket layout at O(batch) cost
-    (assigned with the CURRENT centroids — exactly how FAISS/ScaNN-style
-    IVF lists grow), and a staleness ratio triggers a Lloyd re-train +
-    full rebuild when enough post-training data has accumulated that the
-    old coarse quantizer no longer balances the lists.
-
-    Layout — every committed batch is a partition directory pair::
-
-        <root>/meta.json                   # centroids, params, batch registry
-        <root>/data/_batch=<id>/bucket=<cid>/*.parquet
-
-    Both ``_batch`` and ``bucket`` are partition columns, so (a) probe
-    filters prune to n_probe/K of the files, (b) the committed-batch filter
-    excludes half-written data from a crashed append (its id never reached
-    meta.json, which is swapped atomically via tmp+rename), and (c) append
-    idempotency is a registry lookup. Rebuild re-trains on the committed
-    corpus and publishes a single fresh generation; superseded directories
-    become unreferenced (vacuumable) garbage, exactly like MoR generations
-    after compaction.
-    """
-
-    def __init__(
-        self,
-        spark,
-        root: str,
-        vec_col: str = "embedding",
-        id_col: str = "vec_id",
-        quant: int = 1_000_000,
-    ) -> None:
-        import json
-        import os
-
-        self.spark = spark
-        self.root = root
-        self.vec_col = vec_col
-        self.id_col = id_col
-        self.quant = quant
-        self._meta_path = os.path.join(root, "meta.json")
-        os.makedirs(os.path.join(root, "data"), exist_ok=True)
-        if os.path.exists(self._meta_path):
-            with open(self._meta_path) as fh:
-                self.meta = json.load(fh)
-        else:
-            self.meta = None  # not built yet
-
-    def _save_meta(self) -> None:
-        import json
-        import os
-
-        tmp = self._meta_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(self.meta, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, self._meta_path)  # atomic publish
-
-    @property
-    def centroids(self) -> list[tuple[int, list[float]]]:
-        return [(int(c), list(map(float, v))) for c, v in self.meta["centroids"]]
-
-    def _write_batch(self, df: DataFrame, batch_id: str) -> int:
-        import os
-        import shutil
-
-        # A crashed prior attempt (write landed, meta commit didn't) left an
-        # UNREGISTERED _batch dir; mode('append') would silently double its
-        # rows on retry. The batch id is not registered, so its directory is
-        # entirely this writer's to reclaim — the retry overwrites it.
-        shutil.rmtree(
-            os.path.join(self.root, "data", f"_batch={batch_id}"),
-            ignore_errors=True,
-        )
-        src = materialize(df.select(self.id_col, self.vec_col))
-        out = (
-            src.withColumn("bucket", ivf_assign_expr(self.vec_col, self.centroids))
-            .withColumn("_batch", F.lit(batch_id))
-        )
-        out.write.mode("append").partitionBy("_batch", "bucket").parquet(
-            os.path.join(self.root, "data")
-        )
-        # O(batch) count of what was just written — never a re-read of the
-        # whole index directory tree.
-        return src.count()
-
-    def read_batch_count(self, batch_id: str) -> int:
-        import os
-
-        return (
-            self.spark.read.parquet(os.path.join(self.root, "data"))
-            .where(F.col("_batch") == batch_id)
-            .count()
-        )
-
-    def build(
-        self,
-        df: DataFrame,
-        seed_ids: list[int],
-        iters: int = 2,
-        batch_id: str = "build-0",
-    ) -> dict:
-        """Train the coarse quantizer (deterministic Lloyd) and publish the
-        first generation."""
-        cents = ivf_train_lloyd(
-            df, seed_ids, iters=iters, vec_col=self.vec_col,
-            id_col=self.id_col, quant=self.quant,
-        )
-        self.meta = {
-            "centroids": cents,
-            "seed_ids": list(seed_ids),
-            "iters": iters,
-            "batches": [],
-            "rows_at_train": 0,
-            "rows_since_train": 0,
-            "generation": 0,
-        }
-        n = self._write_batch(df, batch_id)
-        self.meta["batches"] = [batch_id]
-        self.meta["rows_at_train"] = n
-        self._save_meta()
-        return {"batch_id": batch_id, "rows": n, "retrained": True}
-
-    def append(
-        self, df: DataFrame, batch_id: str, retrain_threshold: float | None = None
-    ) -> dict:
-        """O(batch) ingest: assign the new vectors with the CURRENT
-        centroids and append their bucket partitions. Idempotent per batch
-        id. When ``retrain_threshold`` is set and rows appended since the
-        last training exceed ``threshold * rows_at_train``, the index
-        re-trains and rebuilds (the staleness contract)."""
-        if self.meta is None:
-            raise ValueError("IvfIndex.append before build()")
-        if batch_id in self.meta["batches"]:
-            return {"batch_id": batch_id, "rows": 0, "replayed": True}
-        n = self._write_batch(df, batch_id)
-        self.meta["batches"].append(batch_id)
-        self.meta["rows_since_train"] += n
-        try:
-            self._save_meta()
-        except BaseException:
-            # the commit failed: un-register in memory too, or a same-handle
-            # retry would see the batch as replayed and silently skip it
-            self.meta["batches"].remove(batch_id)
-            self.meta["rows_since_train"] -= n
-            raise
-        stats = {"batch_id": batch_id, "rows": n, "replayed": False,
-                 "staleness": self.staleness(), "retrained": False}
-        if (
-            retrain_threshold is not None
-            and self.meta["rows_since_train"]
-            > retrain_threshold * max(self.meta["rows_at_train"], 1)
-        ):
-            self.rebuild()
-            stats["retrained"] = True
-        return stats
-
-    def staleness(self) -> float:
-        return self.meta["rows_since_train"] / max(self.meta["rows_at_train"], 1)
-
-    def read(self) -> DataFrame:
-        """The committed corpus (crashed half-written appends excluded by
-        the partition filter on the registered batch ids)."""
-        import os
-
-        return (
-            self.spark.read.parquet(os.path.join(self.root, "data"))
-            .where(F.col("_batch").isin(self.meta["batches"]))
-        )
-
-    def rebuild(self) -> dict:
-        """Lloyd re-train over the full committed corpus, then republish
-        everything as ONE fresh generation. Old directories become
-        unreferenced garbage (vacuum())."""
-        corpus = materialize(self.read().select(self.id_col, self.vec_col))
-        cents = ivf_train_lloyd(
-            corpus, self.meta["seed_ids"], iters=self.meta["iters"],
-            vec_col=self.vec_col, id_col=self.id_col, quant=self.quant,
-        )
-        gen = self.meta["generation"] + 1
-        batch_id = f"rebuild-{gen}"
-        # The write needs the NEW centroids (assignment runs inside it), but
-        # a failed write must not leave meta pairing retrained centroids
-        # with old-assignment data — a later _save_meta would persist that
-        # corrupted pairing. Restore on any failure; the half-written
-        # _batch dir stays unregistered (reclaimed by retry or vacuum).
-        old_cents = self.meta["centroids"]
-        self.meta["centroids"] = cents
-        try:
-            n = self._write_batch(corpus, batch_id)
-        except BaseException:
-            self.meta["centroids"] = old_cents
-            raise
-        self.meta.update(
-            batches=[batch_id], rows_at_train=n, rows_since_train=0, generation=gen
-        )
-        self._save_meta()
-        return {"batch_id": batch_id, "rows": n, "generation": gen}
-
-    def vacuum(self) -> int:
-        """Delete data directories whose batch id is no longer registered
-        (superseded generations, crashed appends). Returns dirs removed."""
-        import os
-        import shutil
-
-        live = {f"_batch={b}" for b in self.meta["batches"]}
-        removed = 0
-        data = os.path.join(self.root, "data")
-        for d in os.listdir(data):
-            if d.startswith("_batch=") and d not in live:
-                shutil.rmtree(os.path.join(data, d), ignore_errors=True)
-                removed += 1
-        return removed
-
-    def topk(self, query_vec: list[float], k: int = 10, n_probe: int = 2) -> DataFrame:
-        """Partition-pruned probe: bucket filter + committed-batch filter
-        both resolve against directory names at planning time."""
-        ranked = sorted(
-            ((-_cosine_py(query_vec, cv), cid) for cid, cv in self.centroids)
-        )[:n_probe]
-        probe_ids = [cid for _, cid in ranked]
-        q = F.lit([float(x) for x in query_vec])
-        cands = self.read().where(F.col("bucket").isin(probe_ids))
-        scored = cands.select(
-            F.col(self.id_col),
-            F.round(
-                cosine_expr(F.col(self.vec_col), q, len(query_vec)), 6
-            ).alias("cos_sim"),
-        )
-        return _ranked_topk(scored, k, self.id_col)

@@ -193,8 +193,7 @@ def session_windows(
     one session. Returns (key, session_start, session_end, n_events) where
     session_end = last event ts + gap (Spark ``session_window`` contract).
 
-    Native ``F.session_window`` — merging-window HashAggregate, the exact
-    operator the streaming path reuses with state + watermark; no window
+    Native ``F.session_window`` — merging-window HashAggregate; no window
     function, no self-join, one shuffle on the key.
     """
     return (

@@ -58,8 +58,6 @@ def parallelize_for_fanout(df: DataFrame, min_partitions: int | None = None) -> 
     which is the safe direction for small test relations) — are left alone:
     at 100 TB the layout already provides width.
     """
-    if df.isStreaming:  # inputFiles/.rdd are illegal on streaming plans;
-        return df       # micro-batch sizing is the trigger's job
     import os
 
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism

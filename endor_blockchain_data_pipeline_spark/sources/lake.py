@@ -291,18 +291,8 @@ class ManifestTable:
         key_cols: tuple[str, ...] | None = None,
         bucket_key: str | None = None,
         semantics: str | None = None,
-        small_commit_rows: int | None = None,
     ) -> None:
         self.path = path
-        # Writer-side (NOT layout, not persisted): the largest row bound a
-        # commit may carry and still be staged on the driver (``stage``).
-        # None takes DRIVER_STAGE_ROW_LIMIT; 0 stages every non-empty frame
-        # distributed.
-        self.small_commit_rows = (
-            self.DRIVER_STAGE_ROW_LIMIT
-            if small_commit_rows is None
-            else int(small_commit_rows)
-        )
         # Remember which layout params the CALLER pinned: on reopen of an
         # existing table the manifest's stored layout is adopted, and a
         # pinned value that CONFLICTS with it raises instead of silently
@@ -386,10 +376,11 @@ class ManifestTable:
         you do not want a scan job just to find the watermark.
 
         Each manifest persists ``watermark = max(prev watermark, lsn_hi)``
-        so commits that land out of LSN order (e.g. streaming micro-batches
-        committed in file order) can never REGRESS the watermark — a
-        regressed watermark would let ``run_to_watermark`` re-apply already
-        committed ranges under fresh batch ids and duplicate key rows.
+        so commits that land out of LSN order (e.g. ``run_batch`` over an
+        older range that was never applied) can never REGRESS the
+        watermark — a regressed watermark would let ``run_to_watermark``
+        re-apply already committed ranges under fresh batch ids and
+        duplicate key rows.
         """
         m = self.manifest()
         if m is None:
@@ -644,8 +635,8 @@ class ManifestTable:
         compaction folds, the length of a driver-held delta. Without one,
         Spark's static bound of the plan is used (``maxRows``: known for
         local and range relations and projections, filters and unions of
-        them). A bound of at most ``small_commit_rows`` stages on the driver
-        (``_stage_driver``); an unbounded or larger frame takes the
+        them). A bound of at most ``DRIVER_STAGE_ROW_LIMIT`` stages on the
+        driver (``_stage_driver``); an unbounded or larger frame takes the
         distributed write.
         """
         if "_bucket" not in df.columns:
@@ -653,7 +644,7 @@ class ManifestTable:
         commit_dir = os.path.join(self._data_dir, uuid.uuid4().hex[:12])
         if est_rows is None:
             est_rows = _plan_row_bound(df)
-        if est_rows is not None and est_rows <= self.small_commit_rows:
+        if est_rows is not None and est_rows <= self.DRIVER_STAGE_ROW_LIMIT:
             staged = self._stage_driver(df, commit_dir)
             if staged is not None:
                 return staged

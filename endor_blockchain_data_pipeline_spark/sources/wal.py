@@ -161,8 +161,8 @@ def write_wal_batches(wal: DataFrame, path: str, batch_size: int, n_events: int)
 
     Plays the host-side batch producer (``export_batch.py:25-118`` exports
     250-block chunks to an inbox). Returns the list of (lo, hi] ranges.
-    Each batch directory is an independent atomic drop — the unit the
-    streaming/file-drop path picks up.
+    Each batch directory is an independent atomic drop — a ``ParquetFeed``
+    over ``path`` reads every drop that has landed.
     """
     ranges: list[tuple[int, int]] = []
     lo = -1

@@ -6,6 +6,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from endor_blockchain_data_pipeline_spark.functions.decode import decode_changes
+from endor_blockchain_data_pipeline_spark.job import CDCJob, brute_force_state
 from endor_blockchain_data_pipeline_spark.operators.fanout import (
     conv_stats_view,
     fanout_batch,
@@ -26,16 +27,20 @@ def wal(spark):
     return generate_wal(spark, N, n_convs=32, max_turns=6, seed=7, tool_from_lsn=0).cache()
 
 
-@pytest.fixture()
-def tables(tmp_path):
+def _tables(root):
     return (
-        ManifestTable(str(tmp_path / "state"), n_buckets=4),
-        ManifestTable(str(tmp_path / "tool"), n_buckets=4),
+        ManifestTable(str(root / "state"), n_buckets=4),
+        ManifestTable(str(root / "tool"), n_buckets=4),
         ManifestTable(
-            str(tmp_path / "stats"), n_buckets=4,
+            str(root / "stats"), n_buckets=4,
             key_cols=("conv_id", "batch_id"), bucket_key="conv_id",
         ),
     )
+
+
+@pytest.fixture()
+def tables(tmp_path):
+    return _tables(tmp_path)
 
 
 def _run_fanout(wal, tables, lo, hi):
@@ -140,3 +145,27 @@ def test_winner_broadcast_guard_switches_to_shuffle_hash(spark, wal):
     assert "ShuffledHashJoin" in gplan
     assert "BroadcastHashJoin" not in gplan and "SortMergeJoin" not in gplan
     assert_df_equal(fast, guarded)
+
+
+def test_fanout_loop_compacts_every_sink(spark, wal, tmp_path):
+    """The fan-out loop runs the CDC loop's after-commit compaction on every
+    sink: at threshold 2, four batches leave no sink with a two-generation
+    bucket, the state equals the replay oracle, and the tool and stats reads
+    equal those of an uncompacted run."""
+    reads = {}
+    for threshold in (2, 100):
+        state_t, tool_t, stats_t = _tables(tmp_path / f"t{threshold}")
+        job = CDCJob(spark, state_t, wal, compact_threshold=threshold)
+        res = job.run_fanout_to_watermark(tool_t, stats_t, batch_size=N // 4)
+        assert len(res) == 4
+        gens = [t.multi_gen_buckets(2) for t in (state_t, tool_t, stats_t)]
+        if threshold == 2:
+            assert gens == [[], [], []]
+            assert_df_equal(
+                state_t.read(spark), brute_force_state(decode_changes(wal))
+            )
+        else:
+            assert all(gens), gens  # the uncompacted run does pile up
+        reads[threshold] = (tool_t.read(spark), stats_t.read(spark))
+    for compacted, uncompacted in zip(reads[2], reads[100]):
+        assert_df_equal(compacted, uncompacted)

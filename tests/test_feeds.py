@@ -91,6 +91,36 @@ def test_cdc_through_binary_feed(spark, tmp_path):
     assert_df_equal(job.read_state(), brute_force_state(decode_changes(wal)))
 
 
+def test_cdc_over_parquet_drops_applies_each_drop_once(spark, tmp_path):
+    """A stream is repeated batch runs over a watermarked feed: each run
+    applies the drops that landed since the last commit, a run with no new
+    drop commits nothing, and the state equals the replay oracle."""
+    from endor_blockchain_data_pipeline_spark.functions.decode import decode_changes
+    from endor_blockchain_data_pipeline_spark.job import CDCJob, brute_force_state
+    from endor_blockchain_data_pipeline_spark.sources.lake import ManifestTable
+    from tests.conftest import assert_df_equal
+
+    n = 2000
+    drops = str(tmp_path / "drops")
+    wal = generate_wal(spark, n, n_convs=32, max_turns=6, seed=21, tool_from_lsn=1000)
+    assert len(write_wal_batches(wal, drops, batch_size=500, n_events=n)) == 4
+    table = ManifestTable(str(tmp_path / "t"), n_buckets=4)
+
+    def run():
+        feed = ParquetFeed(spark, drops).df()
+        return CDCJob(spark, table, feed, compact_threshold=100).run_to_watermark(500)
+
+    assert len(run()) == 4
+    assert_df_equal(table.read(spark), brute_force_state(decode_changes(wal)))
+    v = table.current_version()
+    assert run() == [] and table.current_version() == v
+
+    more = generate_wal(spark, n + 600, n_convs=32, max_turns=6, seed=21, tool_from_lsn=1000)
+    more.where(F.col("lsn") >= n).write.parquet(f"{drops}/batch-{n - 1}-{n + 599}")
+    assert [(m["lsn_lo"], m["lsn_hi"]) for m in run()] == [(n - 1, n + 499), (n + 499, n + 599)]
+    assert_df_equal(table.read(spark), brute_force_state(decode_changes(more)))
+
+
 def test_jdbc_stripe_bounds_cover_real_range(spark):
     """The JDBC reader's stripes must cover the probed (checkpoint, max]
     range — sentinel bounds (lowerBound=-1, upperBound=2^62) would put every

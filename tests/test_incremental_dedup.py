@@ -116,7 +116,8 @@ def test_pair_bound_falls_back_to_distributed_fold(spark, tmp_path):
     rows1 = [(1, T1), (2, T2), (3, T3)]
     rows2 = [(10, T1), (11, T1), (12, T2), (13, T4)]
 
-    small = DedupIndex(spark, str(tmp_path / "small"), driver_row_limit=1)
+    small = DedupIndex(spark, str(tmp_path / "small"))
+    small.DRIVER_ROW_LIMIT = 1
     big = DedupIndex(spark, str(tmp_path / "big"))
     for i, rows in enumerate([rows1, rows2]):
         s_small = small.add_batch(_docs(spark, rows), f"b{i}")
@@ -374,7 +375,8 @@ def test_remove_distributed_fold_matches_driver(spark, tmp_path):
     a.remove_docs([1, 20], "rm")
     want = sorted(tuple(r) for r in a.keep_list().collect())
 
-    b = DedupIndex(spark, str(tmp_path / "b"), driver_row_limit=2)
+    b = DedupIndex(spark, str(tmp_path / "b"))
+    b.DRIVER_ROW_LIMIT = 2
     b.add_batch(_docs(spark, rows), "b1")
     s = b.remove_docs([1, 20], "rm")
     assert s["fold"] == "distributed-label-propagation"

@@ -113,8 +113,8 @@ def test_mor_window_merge_no_broadcast(spark, wal, oracle, tmp_path):
 
 
 def test_watermark_never_regresses(spark, tmp_path):
-    """Out-of-LSN-order commits (streaming file order) must not move the
-    watermark backwards — else replay re-applies committed ranges."""
+    """Out-of-LSN-order commits (an older range applied last) must not move
+    the watermark backwards — else replay re-applies committed ranges."""
     import datetime as dt
 
     t = ManifestTable(str(tmp_path / "wm"), n_buckets=2)

@@ -100,34 +100,3 @@ def test_additive_semantics_are_pinned_to_the_table(spark, tmp_path):
     with _pytest.raises(ValueError, match="semantics"):
         compact(t, spark, "c2")
 
-
-def test_streaming_continuous_rollup_equals_batch(spark, tmp_path):
-    """Dropped event batches stream into the rollup one file per trigger;
-    the folded answer equals the one-shot GROUP BY over everything
-    streamed, and a checkpoint restart with no new drops commits nothing."""
-    from endor_blockchain_data_pipeline_spark.streaming.stream import (
-        stream_continuous_rollup,
-    )
-
-    ev = _events(spark)
-    drops = str(tmp_path / "drops")
-    for i in range(3):
-        ev.where(F.col("event_id") % 3 == i).coalesce(1).write.parquet(
-            f"{drops}/drop-{i}"
-        )
-
-    ca = ContinuousAggregate(spark, str(tmp_path / "ca"))
-    q = stream_continuous_rollup(
-        spark, drops, ca, checkpoint_dir=str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination(180)
-    assert_df_equal(ca.read(), _oracle(ev))
-
-    n_commits = len(ca.table.committed_batches())
-    q2 = stream_continuous_rollup(
-        spark, drops, ca, checkpoint_dir=str(tmp_path / "ckpt")
-    )
-    q2.awaitTermination(180)
-    assert len(ca.table.committed_batches()) == n_commits
-    assert_df_equal(ca.read(), _oracle(ev))

@@ -2,9 +2,6 @@
 
 from __future__ import annotations
 
-import math
-
-import pyspark.sql.functions as F
 import pytest
 
 from endor_blockchain_data_pipeline_spark.operators.similarity import (
@@ -68,33 +65,6 @@ def test_ivf_topk_matches_brute_force_within_probed_buckets(spark, emb):
     assert len(narrow) == 5
 
 
-def test_ivf_indexed_partition_pruning(spark, emb, tmp_path):
-    """The materialized inverted file turns the probe filter into partition
-    pruning: the pruned read returns exactly what the inline operator
-    computes, and the scan's PartitionFilters carry the bucket predicate."""
-    from endor_blockchain_data_pipeline_spark.operators.similarity import (
-        ivf_topk_indexed,
-        ivf_write_index,
-    )
-
-    cents = ivf_centroids(emb, [0, 1, 2])
-    path = str(tmp_path / "ivf_index")
-    ivf_write_index(emb, path, cents)
-
-    q = [1.0, 0.05, 0.0, 0.0]
-    inline = {
-        (r["vec_id"], r["cos_sim"], r["rank"])
-        for r in ivf_topk(emb, q, cents, k=5, n_probe=2).collect()
-    }
-    indexed_df = ivf_topk_indexed(spark, path, q, cents, k=5, n_probe=2)
-    indexed = {
-        (r["vec_id"], r["cos_sim"], r["rank"]) for r in indexed_df.collect()
-    }
-    assert indexed == inline
-    plan = indexed_df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "bucket" in plan.split("PartitionFilters:")[1][:120]
-
-
 def test_ivf_plan_no_udf(spark, emb):
     cents = ivf_centroids(emb, [0, 1, 2])
     plan = (
@@ -152,158 +122,3 @@ def test_ivf_train_lloyd_empty_bucket_keeps_previous_centroid(spark):
     cents = ivf_train_lloyd(emb2, [0, 5], iters=2)
     got = dict(cents)
     assert got[5] == [2.0, 0.0, 0.0]  # unchanged: bucket stayed empty
-
-
-def test_ivf_trained_centroids_with_materialized_index(spark, emb, tmp_path):
-    """Lloyd-trained centroids compose with the materialized inverted file:
-    write the index under trained assignments, probe via partition pruning,
-    and match the inline trained-path answer exactly."""
-    from endor_blockchain_data_pipeline_spark.operators.similarity import (
-        ivf_topk,
-        ivf_topk_indexed,
-        ivf_train_lloyd,
-        ivf_write_index,
-    )
-
-    cents = ivf_train_lloyd(emb, [0, 1, 2], iters=2)
-    path = str(tmp_path / "ivf_trained")
-    ivf_write_index(emb, path, cents)
-
-    q = [1.0, 0.05, 0.0, 0.0]
-    inline = {
-        (r["vec_id"], r["cos_sim"], r["rank"])
-        for r in ivf_topk(emb, q, cents, k=5, n_probe=2).collect()
-    }
-    indexed_df = ivf_topk_indexed(spark, path, q, cents, k=5, n_probe=2)
-    assert {(r["vec_id"], r["cos_sim"], r["rank"]) for r in indexed_df.collect()} == inline
-    plan = indexed_df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan  # probe = partition pruning
-
-
-# ---------------- incremental IvfIndex ----------------
-
-
-def test_ivf_index_append_equals_oneshot(spark, emb, tmp_path):
-    """build(A) + append(B) must probe identically to a one-shot index of
-    A∪B written with the SAME centroids — appending assigns with the
-    frozen coarse quantizer, exactly the FAISS list-growth contract."""
-    from endor_blockchain_data_pipeline_spark.operators.similarity import (
-        IvfIndex,
-        ivf_topk,
-    )
-
-    a = emb.where(F.col("vec_id") < 18)
-    b = emb.where(F.col("vec_id") >= 18)
-    idx = IvfIndex(spark, str(tmp_path / "ivf"))
-    idx.build(a, seed_ids=[0, 1, 2], iters=2)
-    s = idx.append(b, "b2")
-    assert s["rows"] == 12 and not s["replayed"]
-
-    q = [1.0, 0.05, 0.0, 0.0]
-    got = [(r["vec_id"], r["cos_sim"]) for r in idx.topk(q, k=5, n_probe=2).collect()]
-    # one-shot reference: same centroids (trained on A only), whole corpus
-    want = [
-        (r["vec_id"], r["cos_sim"])
-        for r in ivf_topk(emb, q, idx.centroids, k=5, n_probe=2).collect()
-    ]
-    assert got == want
-
-
-def test_ivf_index_append_idempotent_and_crash_excluded(spark, emb, tmp_path):
-    from endor_blockchain_data_pipeline_spark.operators.similarity import IvfIndex
-
-    idx = IvfIndex(spark, str(tmp_path / "ivf"))
-    idx.build(emb.where(F.col("vec_id") < 18), seed_ids=[0, 1, 2])
-    idx.append(emb.where(F.col("vec_id") >= 18), "b2")
-    n = idx.read().count()
-    s = idx.append(emb.where(F.col("vec_id") >= 18), "b2")  # replay skip
-    assert s["replayed"] and idx.read().count() == n
-
-    # a crashed append = data dir present, batch id never registered:
-    # the committed-batch partition filter must exclude it
-    crashed = emb.where(F.col("vec_id") < 3).select("vec_id", "embedding")
-    crashed.withColumn("bucket", F.lit(0)).withColumn(
-        "_batch", F.lit("crashed")
-    ).write.mode("append").partitionBy("_batch", "bucket").parquet(
-        str(tmp_path / "ivf" / "data")
-    )
-    assert idx.read().count() == n
-    assert idx.vacuum() == 1  # the orphan dir is reclaimable
-    assert idx.read().count() == n
-
-
-def test_ivf_index_staleness_triggers_retrain(spark, emb, tmp_path):
-    """Appending more than threshold × rows_at_train re-trains Lloyd on the
-    full corpus and republishes one generation; probes afterwards equal the
-    inline ivf_topk with the RETRAINED centroids."""
-    from endor_blockchain_data_pipeline_spark.operators.similarity import (
-        IvfIndex,
-        ivf_topk,
-    )
-
-    a = emb.where(F.col("vec_id") < 12)
-    b = emb.where(F.col("vec_id") >= 12)
-    idx = IvfIndex(spark, str(tmp_path / "ivf"))
-    idx.build(a, seed_ids=[0, 1, 2], iters=2)
-    before = idx.centroids
-    s = idx.append(b, "b2", retrain_threshold=0.5)  # 18 > 0.5*12
-    assert s["retrained"]
-    assert idx.meta["rows_since_train"] == 0 and idx.meta["generation"] == 1
-    assert idx.centroids != before  # the quantizer actually moved
-
-    q = [0.0, 1.0, 0.03, 0.0]
-    got = [(r["vec_id"], r["cos_sim"]) for r in idx.topk(q, k=5, n_probe=2).collect()]
-    want = [
-        (r["vec_id"], r["cos_sim"])
-        for r in ivf_topk(emb, q, idx.centroids, k=5, n_probe=2).collect()
-    ]
-    assert got == want
-    # superseded generation dirs are vacuumable; state unchanged
-    assert idx.vacuum() >= 1
-    assert idx.read().count() == 30
-
-
-def test_ivf_index_probe_is_partition_pruned(spark, emb, tmp_path):
-    from endor_blockchain_data_pipeline_spark.operators.similarity import IvfIndex
-
-    idx = IvfIndex(spark, str(tmp_path / "ivf"))
-    idx.build(emb, seed_ids=[0, 1, 2])
-    plan = idx.topk([1.0, 0.0, 0.0, 0.0], k=3, n_probe=1)._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan
-    tail = plan.split("PartitionFilters:")[1][:200]
-    assert "bucket" in tail and "_batch" in tail
-
-
-def test_ivf_index_reopen_adopts_meta(spark, emb, tmp_path):
-    from endor_blockchain_data_pipeline_spark.operators.similarity import IvfIndex
-
-    idx = IvfIndex(spark, str(tmp_path / "ivf"))
-    idx.build(emb, seed_ids=[0, 1, 2])
-    want = sorted(tuple(r) for r in idx.topk([1.0, 0.0, 0.0, 0.0], k=3).collect())
-
-    again = IvfIndex(spark, str(tmp_path / "ivf"))  # fresh open, no build
-    assert again.centroids == idx.centroids
-    assert sorted(tuple(r) for r in again.topk([1.0, 0.0, 0.0, 0.0], k=3).collect()) == want
-
-
-def test_ivf_index_crashed_append_retry_no_duplicates(spark, emb, tmp_path):
-    """Crash AFTER the parquet write but BEFORE the meta commit, then
-    retry the same batch id: rows must not double (the retry reclaims the
-    unregistered _batch directory instead of appending into it)."""
-    from endor_blockchain_data_pipeline_spark.operators.similarity import IvfIndex
-
-    idx = IvfIndex(spark, str(tmp_path / "ivf"))
-    idx.build(emb.where(F.col("vec_id") < 18), seed_ids=[0, 1, 2])
-
-    real_save = idx._save_meta
-    def boom():
-        raise RuntimeError("injected crash before meta commit")
-    idx._save_meta = boom
-    with pytest.raises(RuntimeError, match="injected crash"):
-        idx.append(emb.where(F.col("vec_id") >= 18), "b2")
-    idx._save_meta = real_save
-
-    s = idx.append(emb.where(F.col("vec_id") >= 18), "b2")  # retry heals
-    assert s["rows"] == 12 and not s["replayed"]
-    assert idx.read().count() == 30  # no duplicated batch rows
-    assert idx.read().select("vec_id").distinct().count() == 30

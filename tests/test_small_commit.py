@@ -1,12 +1,14 @@
 """Driver-side staging of bounded commits: parity with the distributed writer.
 
-A commit whose row bound is at most the table's ``small_commit_rows`` is
-staged via one Arrow collect + local per-bucket parquet writes instead of a
-shuffle+write Spark job. These tests pin the contract: the bound picks the
+A commit whose row bound is at most ``ManifestTable.DRIVER_STAGE_ROW_LIMIT``
+is staged via one Arrow collect + local per-bucket parquet writes instead of
+a shuffle+write Spark job. These tests pin the contract: the bound picks the
 writer up front, byte-for-value identical reads, same manifest stats and
 file layout, files no larger than the distributed writer's, fallback to the
 distributed path only when the collect hits the result-size cap, and
-end-to-end live-curation equality between the two modes.
+end-to-end live-curation equality between the two modes. A test forces a
+writer by setting the limit on a table (0: every non-empty frame stages
+distributed) or by patching the class constant.
 """
 
 import os
@@ -38,19 +40,16 @@ def _rows(df):
 
 @pytest.fixture()
 def tables(spark, tmp_path):
-    fast = ManifestTable(
-        str(tmp_path / "fast"),
-        n_buckets=16,
-        key_cols=("conv_id",),
-        bucket_key="conv_id",
-        small_commit_rows=100_000,
+    fast, slow = (
+        ManifestTable(
+            str(tmp_path / name),
+            n_buckets=16,
+            key_cols=("conv_id",),
+            bucket_key="conv_id",
+        )
+        for name in ("fast", "slow")
     )
-    slow = ManifestTable(
-        str(tmp_path / "slow"),
-        n_buckets=16,
-        key_cols=("conv_id",),
-        bucket_key="conv_id",
-    )
+    slow.DRIVER_STAGE_ROW_LIMIT = 0
     return fast, slow
 
 
@@ -103,7 +102,6 @@ def test_collect_failure_falls_back_to_distributed(spark, tmp_path, monkeypatch)
         n_buckets=8,
         key_cols=("conv_id",),
         bucket_key="conv_id",
-        small_commit_rows=1_000,
     )
     df = _frame(spark, n=100)
     calls = []
@@ -129,7 +127,6 @@ def test_non_size_collect_failure_raises(spark, tmp_path, monkeypatch):
         n_buckets=8,
         key_cols=("conv_id",),
         bucket_key="conv_id",
-        small_commit_rows=1_000,
     )
     df = _frame(spark, n=100)
 
@@ -145,7 +142,7 @@ def test_non_size_collect_failure_raises(spark, tmp_path, monkeypatch):
     assert "b1" not in t.committed_batches()
 
 
-def test_live_curation_modes_equal(spark, tmp_path):
+def test_live_curation_modes_equal(spark, tmp_path, monkeypatch):
     """End-to-end: verdicts identical with small commits on vs off."""
     from endor_blockchain_data_pipeline_spark.job import CDCJob
     from endor_blockchain_data_pipeline_spark.operators.live_curation import (
@@ -156,12 +153,11 @@ def test_live_curation_modes_equal(spark, tmp_path):
     wal = generate_wal(spark, 600, n_convs=24, max_turns=4, seed=11)
     verdicts = {}
     for mode, rows in (("fast", 100_000), ("slow", 0)):
+        monkeypatch.setattr(ManifestTable, "DRIVER_STAGE_ROW_LIMIT", rows)
         root = tmp_path / mode
         table = ManifestTable(str(root / "t"), n_buckets=8)
         job = CDCJob(spark, table, wal)
-        lc = LiveCuration(
-            spark, str(root / "cur"), table, small_commit_rows=rows
-        )
+        lc = LiveCuration(spark, str(root / "cur"), table)
         job.run_with_curation(300, lc)
         verdicts[mode] = _rows(lc.verdicts_df())
     assert verdicts["fast"] == verdicts["slow"]
@@ -226,8 +222,9 @@ def test_writer_chosen_up_front_from_row_bound(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(cls, "toArrow", counting)
     t = ManifestTable(
         str(tmp_path / "t"), n_buckets=8, key_cols=("conv_id",),
-        bucket_key="conv_id", small_commit_rows=50,
+        bucket_key="conv_id",
     )
+    t.DRIVER_STAGE_ROW_LIMIT = 50
     wide = t.stage(df, "b1", est_rows=100)
     assert calls == []
     # no caller bound: the plan's own bound (range of 100 rows) is used
@@ -294,7 +291,9 @@ def test_driver_staged_files_no_larger_than_distributed(spark, tmp_path):
     for name, df in (("backfill", backfill.persist()), ("template", template)):
         size = {}
         for cap in (0, None):
-            t = ManifestTable(str(tmp_path / f"{name}-{cap}"), small_commit_rows=cap)
+            t = ManifestTable(str(tmp_path / f"{name}-{cap}"))
+            if cap is not None:
+                t.DRIVER_STAGE_ROW_LIMIT = cap
             staged = t.stage(df, "b1", est_rows=20_000)
             size[cap] = sum(
                 os.path.getsize(os.path.join(t.path, f))

@@ -12,8 +12,6 @@ import os
 import subprocess
 import sys
 
-import pytest
-
 DRIVER = """
 import sys
 from endor_blockchain_data_pipeline_spark.job import CDCJob
@@ -35,7 +33,6 @@ spark.stop()
 """
 
 
-@pytest.mark.timeout(600)
 def test_spark_submit_with_pyfiles_zip(tmp_path):
     sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
     import package as pkg
